@@ -65,7 +65,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCores(4)
     // Optional comma-separated exact-name filter (dev: reproduce one
     // query's per-sweep metrics without paying the full suite).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -76,14 +76,7 @@ object Bench {
     // on a 32-cpu box and the old 1.5×cpus threshold waved it through —
     // wall times came out 1.6× the same-code quiet-box run.
     val loadPre = systemLoadAvg
-    val spark = GraftSession.envProfile(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
@@ -162,6 +155,10 @@ object Bench {
     // +25% wall round be attributed (factor dropped 25% → environment)
     // or flagged (factor flat → regression) instead of argued in prose.
     val calPoints = Array.ofDim[HostCalibration.Point](sweeps)
+    // First exception class per query, over all sweeps. A query that
+    // throws in ANY sweep is reported failed and its seconds stay out of
+    // every time map and total: a throw must never read as a fast run.
+    val failures = collection.mutable.Map.empty[String, String]
     for (s <- 0 until sweeps) {
       calPoints(s) = HostCalibration.measure()
       metrics.reset()
@@ -169,7 +166,9 @@ object Bench {
       for ((name, fn) <- queries) {
         val la = systemLoadAvg
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable =>
+          failures.getOrElseUpdate(name, e.getClass.getName) }
         val dt = (System.nanoTime() - t0) / 1e9
         clearBlocks()
         val snap = metrics.settled
@@ -199,7 +198,7 @@ object Bench {
       // (r13 verdict #3's root cause): listener attribution can
       // under-credit one sweep (a neighbor's async task events
       // straggle across the settle window — q237's official r13 run
-      // recorded [63.3, 45.9, 63.3] KB on a plan ReproPlanFlip proves
+      // recorded [63.3, 45.9, 63.3] KB on a plan whose shape is
       // deterministic), and a min headline turns that single bad
       // sample into the floor every later round is diffed against.
       // The median of 3+ sweeps ignores one straggler in either
@@ -210,7 +209,11 @@ object Bench {
       name -> QRes(samples.map(_._1).min, head, snaps,
                    samples.map(_._1), samples.map(_._2))
     }
-    val qs = results.map { case (k, r) => s"\"" + k + "\":" + r.minSec }
+    val okResults = results.filterNot(r => failures.contains(r._1))
+    val okNames = okResults.map(_._1)
+    val failedJson = names.filter(failures.contains)
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val qs = okResults.map { case (k, r) => s"\"" + k + "\":" + r.minSec }
       .mkString("{", ",", "}")
     // CALIBRATED wall: each sweep's raw seconds × that sweep's host
     // factor (measured at sweep start) converts to reference-box
@@ -219,7 +222,7 @@ object Bench {
     // now a sweep that ran on a degraded box is scaled before it
     // competes for the min rather than silently losing it.
     val sweepFactors = calPoints.map(_.factor)
-    val calQ: Seq[(String, Double)] = names.map { name =>
+    val calQ: Seq[(String, Double)] = okNames.map { name =>
       name -> (0 until sweeps)
         .map(s => times(s)(name)._1 * sweepFactors(s)).min
     }
@@ -239,19 +242,20 @@ object Bench {
         s"\"sweep_failed_tasks\":${r.perSweep.map(_.failed).mkString("[", ",", "]")}," +
         s"\"sweep_sec\":${r.sweepSec.mkString("[", ",", "]")}," +
         "\"loadavg_starts\":" +
-        r.loads.map(l => f"$l%.2f").mkString("[", ",", "]") + "}"
+        r.loads.map(l => f"$l%.2f").mkString("[", ",", "]") +
+        s",\"status\":\"${failures.getOrElse(k, "ok")}\"}"
     }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2.minSec).sum else 0.0
+    val total = okResults.map(_._2.minSec).sum
     val sweepTotals = (0 until sweeps)
-      .map(s => names.map(n => times(s)(n)._1).sum)
+      .map(s => okNames.map(n => times(s)(n)._1).sum)
     val loadLine =
       f""""load":{"loadavg_1m_presession":$loadPre%.2f,"loadavg_1m_start":$loadStart%.2f,"loadavg_1m_end":$loadEnd%.2f,"cpu_wall_ratio":${if (wallSec > 0) cpuSec / wallSec else 0.0}%.2f,"contended":$contended,"sweep_totals_sec":${sweepTotals.map(t => f"$t%.1f").mkString("[", ",", "]")}}"""
-    val headBytes = results.map { case (k, r) => k -> r.head }
+    val headBytes = okResults.map { case (k, r) => k -> r.head }
     // The round is STAMPED into the JSON (r12 verdict #7: the round-12
     // detail landed in a file named r13 and a future reader would diff
     // the wrong pair — the stamp makes the artifact self-describing
     // regardless of the file it ends up in).
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"queries":$qs,"calibrated_total_sec":$calTotal,"calibrated_queries":$calQs,$calLine,"query_metrics":$qm,"sf":"$sfDir","cpus":$cpus,$loadLine,"delta_vs_prev":${deltaVsPrev(headBytes, calQ, sfDir, cpus)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"queries":$qs,"calibrated_total_sec":$calTotal,"calibrated_queries":$calQs,$calLine,"query_metrics":$qm,"failed":$failedJson,"sf":"$sfDir","cpus":$cpus,$loadLine,"delta_vs_prev":${deltaVsPrev(headBytes, calQ, sfDir, cpus)}}"""
     println(line)
     // The driver's tail capture truncates stdout at 2000 chars (r06 lost
     // every per-query timing that way) — persist the full JSON as a
@@ -295,7 +299,7 @@ object Bench {
     // JSON object that always fits; it carries the contention evidence
     // (pre-session loadavg, per-sweep totals) and points at the
     // committed BENCH_LOCAL artifact for the per-query map.
-    println(f"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"n_queries":${results.size},"calibrated_total_sec":$calTotal%.1f,"host_factor_median":${sweepFactors.sorted.apply(sweeps / 2)}%.4f,"sf":"$sfDir","cpus":$cpus,"contended":$contended,"loadavg_1m_presession":$loadPre%.2f,"sweep_totals_sec":${sweepTotals.map(t => f"$t%.1f").mkString("[", ",", "]")},"detail":"$artifact"}""")
+    println(f"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"n_queries":${results.size},"failed":$failedJson,"calibrated_total_sec":$calTotal%.1f,"host_factor_median":${sweepFactors.sorted.apply(sweeps / 2)}%.4f,"sf":"$sfDir","cpus":$cpus,"contended":$contended,"loadavg_1m_presession":$loadPre%.2f,"sweep_totals_sec":${sweepTotals.map(t => f"$t%.1f").mkString("[", ",", "]")},"detail":"$artifact"}""")
     spark.stop()
   }
 
@@ -378,7 +382,7 @@ object Bench {
 
   private def deltaVsPrev(results: Seq[(String, Snap)],
                           calibrated: Seq[(String, Double)],
-                          sfDir: String, cpus: String): String = {
+                          sfDir: String, cpus: Int): String = {
     val prevFile = (1 until currentRound).reverse.iterator
       .map(n => n -> new java.io.File(s"BENCH_LOCAL_r$n.json"))
       .find(_._2.isFile)
@@ -395,7 +399,7 @@ object Bench {
       s"""{"prev_round":-1,"flagged":{},"wall_flagged":{}}"""
     } else if (prevSf != sfDir) {
       s"""{"prev_round":$prevRound,"skipped":"sf_mismatch: prev=$prevSf now=$sfDir","flagged":{},"wall_flagged":{}}"""
-    } else if (prevCpus != cpus) {
+    } else if (prevCpus != cpus.toString) {
       s"""{"prev_round":$prevRound,"skipped":"cpus_mismatch: prev=${if (prevCpus.isEmpty) "unrecorded" else prevCpus} now=$cpus","flagged":{},"wall_flagged":{}}"""
     } else {
       // Prefer the prev artifact's per-sweep arrays (present since r12)

@@ -16,14 +16,24 @@ object GraftSession {
     * SPARK_GRAFT_CPUS so bench/verify runs match the harness sizing.
     */
   def local(appName: String = "graft",
-            cores: Option[Int] = None): SparkSession = {
-    val n = cores
-      .orElse(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt))
-      .getOrElse(math.min(Runtime.getRuntime.availableProcessors(), 32))
-    configure(
-      SparkSession.builder().master(s"local[$n]").appName(appName), n
-    ).getOrCreate()
-  }
+            cores: Option[Int] = None): SparkSession =
+    builder(appName, cores.getOrElse(
+      envCores(math.min(Runtime.getRuntime.availableProcessors(), 32))))
+      .getOrCreate()
+
+  /** SPARK_GRAFT_CPUS when set, else the caller's `default`. */
+  def envCores(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(default)
+
+  /** The one place a graft session is specified: `local[cores]` with
+    * `cores` shuffle partitions, [[configure]]'s settings, and the
+    * [[envProfile]] selected by SPARK_GRAFT_PROFILE. Callers add their
+    * own confs on top and call `getOrCreate()`.
+    */
+  def builder(appName: String, cores: Int): SparkSession.Builder =
+    envProfile(configure(
+      SparkSession.builder().master(s"local[$cores]").appName(appName),
+      cores))
 
   /** Cluster-profile additions for the 100 TB deployment. Semantics are
     * identical to [[configure]]; these only size the runtime:

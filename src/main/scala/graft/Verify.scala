@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,26 @@ object Verify {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, pref) => (s, o, Some(pref))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.envProfile(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession
+      .builder("graft-verify", GraftSession.envCores(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // arg 3: comma-separated name PREFIXES (one prefix = the classic
     // single-query form; a list drives the synth-ladder subset gates).
     val prefixes = only.map(_.split(",").map(_.trim).filter(_.nonEmpty))
-    SparkEntry.queries
+    val failures = SparkEntry.queries.toSeq
       .filter { case (name, _) =>
         prefixes.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      .flatMap { case (name, fn) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> e)
+        }
       }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -47,6 +43,13 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Always written (`{}` when every query passed), so a reader can
+    // tell a clean run from one whose failures only reached stderr.
+    val failuresJson = failures.map { case (name, e) =>
+      s"${q(name)}: {\"class\": ${q(e.getClass.getName)}, " +
+        s"\"message\": ${q(String.valueOf(e.getMessage))}}"
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failuresJson)
     spark.stop()
   }
 }

@@ -567,8 +567,7 @@ object Dedup {
     * (`doc_id`, `sh`, `sz`): prefix postings self-join, length filter,
     * and (when `positional`) the positional upper-bound prune. Exposed
     * separately so the candidate count — the quantity the filters exist
-    * to shrink — is directly measurable (ScaleProbe) without running
-    * verification.
+    * to shrink — is directly measurable without running verification.
     */
   private[graft] def ppjoinCandidates(sets: DataFrame, num: Int, den: Int,
                                       positional: Boolean): DataFrame = {

@@ -125,8 +125,8 @@ object GraphOps {
     * sweep). Cadence by measurement,
     * re-taken when the engine under it changed: the r10 A/B
     * (pre-clampStats) had eager-per-phase winning by 16-28%; the r12
-    * re-run WITH the checkpoint stats clamp (AbCheckpointCadence,
-    * sf0.1 near-dup pair graph, min-of-4) flipped it — the folded
+    * re-run WITH the checkpoint stats clamp (sf0.1 near-dup pair
+    * graph, min-of-4) flipped it — the folded
     * round is ~36% faster (1.18 s vs 1.84 s) because the large-star
     * blocks persist inside the round's witness job instead of paying
     * a job of their own, while the lazy checkpoint still gives both
@@ -145,8 +145,7 @@ object GraphOps {
     connectedComponentsWithStats(edges, srcCol, dstCol, maxIter)._1
 
   /** [[connectedComponents]] plus the number of large+small star
-    * rounds it ran — the convergence diagnostic ScaleProbe graphs
-    * (rounds vs diameter).
+    * rounds it ran — a convergence diagnostic (rounds vs diameter).
     */
   def connectedComponentsWithStats(edges: DataFrame, srcCol: String,
                                    dstCol: String, maxIter: Int = 50)
@@ -227,26 +226,13 @@ object GraphOps {
       // previous round's blocks are released only AFTER the witness
       // materializes this round (a truncated localCheckpoint cannot be
       // recomputed once unpersisted).
-      val smallRaw = large
+      val small = large
         .join(cntBcast(smin), col("a") === col("sa"))
         .select(col("b").as("a"), col("m").as("b"))
         .filter(col("a") =!= col("b"))
         .unionByName(smin.select(col("sa").as("a"), col("m").as("b")))
         .distinct()
-      if (iter == 0 && sys.env.contains("GRAFT_CC_DEBUG")) {
-        // debug-only round-1 plan probe (the GRAFT_RANK_DEBUG
-        // convention): execute the un-checkpointed round through its
-        // own QueryExecution and print the finalized post-AQE plan —
-        // the evidence hook for the counted star-min broadcasts, which
-        // the final frame's plan cannot show (each round hides behind
-        // a LogicalRDD scan)
-        val dbgQe = smallRaw
-          .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-          .queryExecution
-        dbgQe.toRdd.count()
-        println(dbgQe.executedPlan.toString)
-      }
-      val small = smallRaw.graftCheckpointLazy()
+        .graftCheckpointLazy()
       val prevCur = cur
       cur = small
       val s = checksum(cur)
@@ -271,8 +257,6 @@ object GraphOps {
       .graftCheckpoint()
     GraftColumns.unpersistCheckpoint(cur)
     GraftColumns.unpersistCheckpoint(verts)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"[cc] star rounds=$iter")
     (labels, iter)
   }
 
@@ -414,17 +398,6 @@ object GraphOps {
         (keyedCheckpoint(e.join(outw, Seq("src")), "src", sizeHint = e),
          nodes.withColumn("__base", lit(base)))
 
-    if (sys.env.contains("GRAFT_RANK_DEBUG")) {
-      def part(df: DataFrame): String =
-        df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-          .queryExecution.analyzed match {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            s"${l.outputPartitioning}"
-          case o => s"not-a-LogicalRDD: ${o.getClass.getSimpleName}"
-        }
-      println(s"[rank] p from e bytes: ew=${part(ew)} " +
-        s"nodesBase=${part(nodesBase)}")
-    }
     val ranks = rankLoop(
       ew, nodesBase,
       nodes.withColumn("rank_units", lit(totalUnits / n)).graftCheckpoint(),
@@ -478,7 +451,7 @@ object GraphOps {
     // Cadence by measurement, re-taken whenever the engine under it
     // changes: the r10 A/B (pre-clampStats) had eager-per-round winning
     // by 15-30%; the r12 re-run WITH `GraftColumns.clampStats` in place
-    // (AbCheckpointCadence, sf0.1/local[32], min-of-8 across two
+    // (sf0.1/local[32], min-of-8 across two
     // sessions) flipped it — one LAZY checkpoint per round, the whole
     // chain materialized by a single job, is ~12% faster (2.87 s vs
     // 3.28 s): lineage stays truncated per round (clamped stats, small
@@ -504,25 +477,12 @@ object GraphOps {
                 expr(s"(__r * $dampNum * __w) div ($dampDen * __outw)")
                   .as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      val nextRaw = nodesBase
+      val next = nodesBase
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
                 (col("__base") + coalesce(col("__in"), lit(0L)))
                   .as("rank_units"))
-      if (i == 0 && sys.env.contains("GRAFT_RANK_DEBUG")) {
-        // debug-only plan-shape probe (the GRAFT_CC_DEBUG convention):
-        // execute round 1 standalone THROUGH ITS OWN QueryExecution
-        // (r15 ADVICE: the old noop write ran a separate QE, so the
-        // printed plan was the never-executed initial adaptive plan)
-        // and print the finalized post-AQE plan — the lazy checkpoint
-        // below hides the round internals behind a LogicalRDD scan
-        val dbgQe = nextRaw
-          .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-          .queryExecution
-        dbgQe.toRdd.count()
-        println(dbgQe.executedPlan.toString)
-      }
-      val next = nextRaw.graftCheckpointLazy()
+        .graftCheckpointLazy()
       handles += next
       ranks = next
       i += 1
@@ -927,7 +887,7 @@ object GraphOps {
     * Output: (node, core_degree) — survivors with their degree inside
     * the k-core (≥ k by construction). Multi-edges count once (the
     * input is distinct-ed); self-loops are dropped.
-    * Returns (result, rounds) — rounds is the ScaleProbe diagnostic.
+    * Returns (result, rounds) — rounds is a convergence diagnostic.
     *
     * RELEASE CONTRACT: result == handle (the [[connectedComponents]]
     * convention; the result aggregates over the surviving-edge

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.{GraftSession, SparkEntry}
 
 /** Optimization-round plan snapshots: for each named query, write
@@ -14,22 +12,15 @@ import graft.{GraftSession, SparkEntry}
   *
   * Usage: runMain graft.tools.PlanSnap <sfDir> <outDir> <tag> <name1,name2,…>
   *
-  * The session mirrors the bench's configuration (same master sizing via
-  * SPARK_GRAFT_CPUS, same shuffle-partition count, AQE on) so the plans
-  * shown here are the plans the bench actually times.
+  * The session comes from the bench's own [[graft.GraftSession.builder]]
+  * (only the SPARK_GRAFT_CPUS default differs), so the plans shown here
+  * are the plans the bench actually times.
   */
 object PlanSnap {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.envProfile(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession
+      .builder("graft-plansnap", GraftSession.envCores(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val keep = names.split(",").map(_.trim).filter(_.nonEmpty).toSet

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * ever been validated at sf0.01/sf0.1; the brief's question is 100×
   * behavior"). sf0.1 × 10 ≈ the sf1.0 the environment lacks.
   *
-  * Inflation discipline = [[graft.ScaleProbe]]'s, applied to every
-  * table with FOREIGN KEYS KEPT CONSISTENT: the whole database
+  * Inflation discipline, applied to every table with FOREIGN KEYS
+  * KEPT CONSISTENT: the whole database
   * universe is replicated `mult` times, every key column remapped
   * `k·mult + copy`, so copy c of every table joins exactly copy c of
   * every other — join fan-outs and cardinality ratios are preserved,

@@ -33,7 +33,7 @@ object GraftColumns {
     * iterative self-joining loops can't compound it without bound.
     */
   def checkpoint[T](ds: Dataset[T]): Dataset[T] =
-    measuredStats(tag(ds.localCheckpoint()))
+    clampStats(tag(ds.localCheckpoint()))
 
   /** LAZY [[checkpoint]]: marks the plan's RDD for local checkpointing
     * and tags it, but runs NO job — the FIRST action a caller fires on
@@ -70,77 +70,6 @@ object GraftColumns {
     val f = classOf[execution.LogicalRDD].getDeclaredField("originConstraints")
     f.setAccessible(true)
     f
-  }
-
-  /** OPT-IN: replace an EAGER checkpoint's carried statistics with the
-    * ACTUAL materialized size (see [[measuredStatsEnabled]] for why
-    * this is not the default).
-    *
-    * `localCheckpoint` carries the checkpointed PLAN's estimated
-    * statistics forward — for a graft intermediate that estimate is
-    * usually garbage (a spans frame reaching the cut join carries its
-    * grams-join ancestry's multiplied sizes, clamped at 2^50), so
-    * every downstream join over a checkpoint plans SortMergeJoin
-    * initially and relies on AQE to rescue it into a broadcast at
-    * runtime. That rescue is a RACE: if the probe side's exchange
-    * materializes before the build side's stats arrive, the flip
-    * happens too late and the probe pays a full extra shuffle —
-    * observed live as q265's two plans (17 stages/fast vs 18/slow),
-    * selected by JVM warmth and suite position, +47% wall in the r13
-    * bench where all three sweeps lost the race.
-    *
-    * An EAGER checkpoint's blocks exist by the time this runs, so the
-    * block manager knows the real size — carry THAT. Initial plans
-    * then broadcast genuinely small intermediates (no race, no
-    * AQE dependence) and stream genuinely big ones, deterministically.
-    * Sizes are in-memory object sizes (MEMORY_AND_DISK deserialized
-    * blocks) — conservative vs the planner's serialized-row sizing,
-    * which only biases marginal frames AWAY from broadcast, the safe
-    * side. Row counts are dropped (unknown ≠ a stale estimate). Falls
-    * back to [[clampStats]] when storage info is unavailable (evicted
-    * or empty frames keep the old conservative carry). Lazy
-    * checkpoints ([[lazyCheckpoint]]) have no blocks yet and always
-    * take the clamp path.
-    */
-  /** MEASURED AND NOT ADOPTED as the default (r14): accurate sizes on
-    * every checkpoint make small intermediates broadcast in the
-    * INITIAL plan — deterministic, race-free — but each broadcast is a
-    * driver collect, and the per-round broadcasts it induces in the
-    * iterative operators cost more than AQE's lazy runtime conversion
-    * saves: sf0.1 20-query subset, min-of-2 interleaved, 80.3 s
-    * (clamped + AQE) vs 87.2 s (measured; q269 +2.3 s, q205 +0.7 s,
-    * q140/q209 +0.4 s each), and the sf0.01 full sweep showed the same
-    * +9%. The one race it fixed deterministically (q265's cut-join
-    * probe pre-shuffle) is pinned surgically instead
-    * ([[graft.operators.Intervals.cutSpansText]]'s counted broadcast).
-    * SPARK_GRAFT_MEASURED_STATS=on enables it for experiments.
-    */
-  private lazy val measuredStatsEnabled =
-    sys.env.get("SPARK_GRAFT_MEASURED_STATS").contains("on")
-
-  private def measuredStats[T](c: Dataset[T]): Dataset[T] = {
-    if (!measuredStatsEnabled) return clampStats(c)
-    val cd = c.asInstanceOf[classic.Dataset[T]]
-    cd.queryExecution.analyzed match {
-      case l: execution.LogicalRDD =>
-        val bytes = cd.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == l.rdd.id)
-          .map(i => i.memSize + i.diskSize)
-          .getOrElse(0L)
-        if (bytes <= 0L) clampStats(c)
-        else {
-          val ns = l.stats.copy(sizeInBytes = BigInt(bytes),
-                                rowCount = None)
-          val cons = originConstraintsField.get(l)
-            .asInstanceOf[Option[
-              org.apache.spark.sql.catalyst.expressions.ExpressionSet]]
-          val np = new execution.LogicalRDD(
-            l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
-            l.isStreaming, l.stream)(cd.sparkSession, Some(ns), cons)
-          new classic.Dataset[T](cd.sparkSession, np, cd.exprEnc)
-        }
-      case _ => c
-    }
   }
 
   /** Clamp the `originStats` a `localCheckpoint` carries forward.

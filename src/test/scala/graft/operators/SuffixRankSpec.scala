@@ -42,6 +42,27 @@ class SuffixRankSpec extends SparkSpec {
   test("early exit (all ranks distinct before the cap) changes nothing") {
     val rows = Seq(1L -> "abcdefgh") // all suffixes differ at char 1
     assert(ranksOf(rows, cap = 64) == bruteRanks(rows, cap = 64))
+    // The exit can also fire in the LAST doubling round, after the
+    // loop has re-laid r out by doc (keyedByDoc) between rounds. Ranks
+    // start at level 16 and double to the cap, so a cap of 128 gives
+    // three doubling rounds (16 -> 32 -> 64 -> 128). A 96-char block
+    // shared by docs 1 and 2 ties suffixes up to level 64; every
+    // capped suffix differs at level 128, so only the third round
+    // makes all ranks distinct and the finalize pass is skipped. Each
+    // doc ends in its own digit so short tail suffixes never tie
+    // across docs.
+    val rnd = new scala.util.Random(42)
+    def ab(len: Int) = Seq.fill(len)(if (rnd.nextBoolean()) 'a' else 'b').mkString
+    val shared = ab(96)
+    val big = Seq(1L -> (ab(300) + shared + "a" + ab(200) + "1"),
+                  2L -> (ab(250) + shared + "b" + ab(150) + "2"),
+                  3L -> (ab(120) + "3"))
+    val capped = (l: Int) => big.flatMap { case (_, t) =>
+      t.indices.map(i => t.substring(i, math.min(t.length, i + l))) }
+    assert(capped(128).size >= 1000)
+    assert(capped(128).distinct.size == capped(128).size)
+    assert(capped(64).distinct.size < capped(64).size)
+    assert(ranksOf(big, cap = 128) == bruteRanks(big, cap = 128))
   }
 
   test("adjacentDupStats: max repeated-substring length per doc, " +
