@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the chess.com-shaped sources (SURVEY.md §2.1 S2/S3).
   *
@@ -78,10 +79,19 @@ object ArchiveSource {
     * batch path when payloads are staged to a landing dir first.
     */
   def readLanding(spark: SparkSession, landingDir: String): DataFrame =
-    spark.read
-      .schema(Schemas.archiveType)
-      .option("multiLine", "true")
-      .json(landingDir)
+    landing((schema, options) =>
+      spark.read.schema(schema).options(options).json(landingDir))
+
+  /** The landing-file read shared by [[readLanding]] and the streaming
+    * reader ([[graft.streaming.StreamingIngest.readLandingStream]]): the
+    * archive schema, one multi-line JSON document per file, the file's
+    * path as `archive_url`, one row per game (`explode_outer`, so an empty
+    * archive still yields a null-game row). `json` opens the files with
+    * the given schema and reader options, batch or streaming.
+    */
+  private[graft] def landing(
+      json: (StructType, Map[String, String]) => DataFrame): DataFrame =
+    json(Schemas.archiveType, Map("multiLine" -> "true"))
       .withColumn("archive_url", input_file_name())
       .select(col("archive_url"), explode_outer(col("games")).as("game"))
 }

@@ -71,10 +71,6 @@ final class GamesStore(root: String) extends Serializable {
     games(spark).select("game_url")
       .filter(length(trim(col("game_url"))) > 0).distinct()
 
-  /** F2: archives already marked processed. */
-  def processedArchiveUrls(spark: SparkSession): DataFrame =
-    ledger(spark).select("archive_url").distinct()
-
   // --------------------------------------------------------------- writes
 
   /** K1 + F1: idempotent batched append. Drops rows whose `game_url`
@@ -132,10 +128,6 @@ final class GamesStore(root: String) extends Serializable {
       .coalesce(1)
       .write.mode("append").parquet(ledgerPath)
   }
-
-  def appendLedger(spark: SparkSession, username: String, archiveUrl: String,
-                   gameCount: Long): Unit =
-    appendLedgerRows(spark, Seq((username, archiveUrl, gameCount)))
 
   /** K3: best-effort status append, batched like the ledger (errors
     * swallowed, like the reference — a failed log line must never fail the

@@ -3,12 +3,15 @@ package graft.semantic
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The 11-measure chess semantic layer (SURVEY.md §2.6 A1–A11).
+/** The per-game outcome under the chess measures (SURVEY.md §2.6).
   *
-  * Measure names attested in the reference's report layout; bodies inferred
-  * from name + schema (the model blob is compressed — SURVEY.md §0 note).
-  * Operates on the derived fact (GameTransforms.withDerived): requires
-  * `result`, `user_color`, and the derived dimension columns.
+  * The 11 measures A1–A11 themselves live in the [[Dashboard]] companion,
+  * as readers of four additive counters (games, wins, losses, draws);
+  * this object classifies each game into the win/loss/draw the counters
+  * sum. Measure names are attested in the reference's report layout;
+  * bodies are inferred from name + schema (the model blob is compressed —
+  * SURVEY.md §0 note). Operates on the derived fact
+  * (GameTransforms.withDerived): requires `result` and `user_color`.
   */
 object ChessMeasures {
 
@@ -48,27 +51,4 @@ object ChessMeasures {
   def winExpr: Column  = (o === "win").cast("long")
   def lossExpr: Column = (o === "loss").cast("long")
   def drawExpr: Column = (o === "draw").cast("long")
-
-  // --------------------------------------------------- the 11 measures
-
-  /** A1 `TotalGames` */
-  val totalGames: Measure = Measure("total_games", count(lit(1)))
-  /** A2 `Total Wins` */
-  val totalWins: Measure = Measure("total_wins", sum(winExpr))
-  /** A3 `Total Losses` */
-  val totalLosses: Measure = Measure("total_losses", sum(lossExpr))
-  /** A4 `Total Draws` */
-  val totalDraws: Measure = Measure("total_draws", sum(drawExpr))
-  /** A5/A6 `Win%` / `WinRate` — null-safe divide; evaluates correctly in
-    * any group context because it's a pure aggregate expression.
-    */
-  val winRate: Measure = Measure("win_rate",
-    sum(winExpr).cast("double") / nullif(count(lit(1)), lit(0)))
-  /** A8/A9 `Games_Count` / `Games_vs_Opponent` (same body, group differs) */
-  val gamesCount: Measure = Measure("games_count", count(lit(1)))
-  /** A10 `Wins_vs_Opponent` */
-  val winsVsOpponent: Measure = Measure("wins", sum(winExpr))
-
-  val all: Seq[Measure] =
-    Seq(totalGames, totalWins, totalLosses, totalDraws, winRate)
 }

@@ -1,92 +1,168 @@
 package graft.semantic
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.GameTransforms
 
-/** The reference dashboard's visual queries (SURVEY.md §2.6, pbix Layout
-  * v5–v14), compiled to DataFrame plans over the derived games fact.
-  * Every query takes a [[FilterContext]] — the page's active slicers —
-  * reproducing the BI cross-filter semantics (each visual's aggregate is
-  * evaluated under the conjunction of all active filters).
+/** The reference dashboard's six visuals (SURVEY.md §2.6, pbix Layout
+  * v5–v14) over the derived games fact. Every method takes a
+  * [[FilterContext]] — the page's active slicers — reproducing the BI
+  * cross-filter semantics (each visual's aggregate is evaluated under the
+  * conjunction of all active filters), and is `visual(counters(ctx(fact),
+  * grain))`: the companion's reader of the same name over the counters of
+  * the visual's grain. The measures A1–A11 are defined there.
   */
 final class Dashboard(gamesFact: DataFrame) {
 
   /** Derived fact shared by all visuals. */
   val fact: DataFrame = GameTransforms.withDerived(gamesFact)
-  private val model = new SemanticModel(fact)
-  import ChessMeasures._
 
-  /** v5/v11 KPI cards + donut: global W/L/D/total/rate (one row). */
+  private def at(grain: String, ctx: FilterContext): DataFrame =
+    Dashboard.counters(ctx(fact), Dashboard.grainDims(grain))
+
+  /** v5/v11 KPI cards + donut. */
   def cards(ctx: FilterContext = FilterContext.empty): DataFrame =
-    model.query(Nil, Seq(totalGames, totalWins, totalLosses, totalDraws, winRate), ctx)
+    Dashboard.cards(at("global", ctx))
 
-  /** v7: opponents pivot — Top-10 opponents by games played, with games
-    * and wins per opponent (F7 Top-N subquery filter shape).
-    */
+  /** v7 Top-`n` opponents (F7). */
   def topOpponents(n: Int = 10,
                    ctx: FilterContext = FilterContext.empty): DataFrame =
-    model.topNQuery(col("opponent_username"), "opponent_username", n,
-      gamesCount, Seq(gamesCount, winsVsOpponent, winRate), ctx)
-      .orderBy(col("games_count").desc, col("opponent_username").asc)
+    Dashboard.topOpponents(at("opponent", ctx), n)
 
-  /** v12: win rate by time-control bucket × color (A6 matrix). */
+  /** v12 win rate by time-control bucket × color. */
   def winRateByBucketAndColor(ctx: FilterContext = FilterContext.empty): DataFrame =
-    model.query(Seq(col("time_control_bucket"), col("user_color")),
-                Seq(gamesCount, totalWins, winRate), ctx)
+    Dashboard.winRateByBucketAndColor(at("bucket_color", ctx))
+
+  /** v10 win rate by opponent rating band. */
+  def winRateByOpponentBucket(ctx: FilterContext = FilterContext.empty): DataFrame =
+    Dashboard.winRateByOpponentBucket(at("opp_bucket", ctx))
+
+  /** v14 Top-`n` openings (F8). */
+  def topOpenings(n: Int = 5,
+                  ctx: FilterContext = FilterContext.empty): DataFrame =
+    Dashboard.topOpenings(at("eco", ctx), n)
+
+  /** v6 A11 `Rolling12Days_WinRate` over a trailing `days`-day window. */
+  def rollingWinRate(spark: SparkSession, days: Int = 12,
+                     ctx: FilterContext = FilterContext.empty): DataFrame =
+    Dashboard.rollingWinRate(spark, at("daily", ctx), days)
+}
+
+/** The one definition of the visuals and of the 11 chess measures
+  * (SURVEY.md §2.6 A1–A11), shared by [[Dashboard]] and
+  * [[graft.streaming.StreamingDashboard]].
+  *
+  * All 11 measures are built from four ADDITIVE counters — games, wins,
+  * losses, draws — so a visual needs only those counters at its grain:
+  *
+  *  - A1–A4 (`TotalGames`, `Total Wins/Losses/Draws`) and A8–A10
+  *    (`Games_Count`, `Games_vs_Opponent`, `Wins_vs_Opponent`) are the
+  *    counters themselves at the visual's grain;
+  *  - A5–A7 (`Win%`, `WinRate`, `WinRate_ByOpening`) are `wins / games`
+  *    derived at read time — a rate is not additive, so it is never
+  *    aggregated;
+  *  - A11 (`Rolling12Days_WinRate`) is the same rate over a trailing
+  *    window of the daily grain.
+  *
+  * The batch dashboard aggregates a grain's counters from the fact on
+  * every call; the streaming dashboard keeps them as per-grain state and
+  * hands its latest committed version to the same readers. Each reader
+  * below takes the counters of one grain (a frame with the grain's dims
+  * plus `games`, `wins`, `losses`, `draws`).
+  */
+object Dashboard {
+  import ChessMeasures.{drawExpr, lossExpr, winExpr}
+
+  /** The visual grains and their dimension columns over the derived
+    * fact. Every visual reads exactly one grain.
+    */
+  val Grains: Seq[(String, Seq[String])] = Seq(
+    "global"       -> Nil,
+    "bucket_color" -> Seq("time_control_bucket", "user_color"),
+    "opp_bucket"   -> Seq("opponent_rating_bucket"),
+    "opponent"     -> Seq("opponent_username"),
+    "eco"          -> Seq("eco"),
+    "daily"        -> Seq("date_ymd"))
+
+  private val grainDims: Map[String, Seq[String]] = Grains.toMap
+
+  /** The additive counters every grain carries. */
+  private[graft] val Counters: Seq[String] = Seq("games", "wins", "losses", "draws")
+
+  /** The counters at `dims` grain over a DERIVED fact: one row per key,
+    * or one row in all for the global grain (null sums on an empty fact).
+    */
+  def counters(derived: DataFrame, dims: Seq[String]): DataFrame =
+    derived.groupBy(dims.map(col): _*)
+      .agg(count(lit(1)).as("games"), sum(winExpr).as("wins"),
+           sum(lossExpr).as("losses"), sum(drawExpr).as("draws"))
+
+  /** A5–A7 win rate: null-safe `wins / games`. */
+  private def winRate: Column =
+    (col("wins").cast("double") / nullif(col("games"), lit(0L))).as("win_rate")
+
+  /** F7/F8 Top-N: the `n` keys with the most games, ties broken by the
+    * key ascending — a total order, so the key set is deterministic. A
+    * null key (the BI "(Blank)" member) ranks like any other.
+    */
+  private def topByGames(c: DataFrame, dim: String, n: Int): DataFrame =
+    c.orderBy(col("games").desc, col(dim).asc).limit(n)
+
+  /** v5/v11 cards (`global` grain): A1–A5, one row. */
+  def cards(c: DataFrame): DataFrame =
+    c.select(col("games").as("total_games"), col("wins").as("total_wins"),
+             col("losses").as("total_losses"), col("draws").as("total_draws"),
+             winRate)
+
+  /** v12 matrix (`bucket_color` grain): A6 per time-control bucket ×
+    * color, best win rate first.
+    */
+  def winRateByBucketAndColor(c: DataFrame): DataFrame =
+    c.select(col("time_control_bucket"), col("user_color"),
+             col("games").as("games_count"), col("wins").as("total_wins"),
+             winRate)
       .orderBy(col("win_rate").desc, col("time_control_bucket").asc,
                col("user_color").asc)
 
-  /** v10: win rate by opponent rating band (P13's 200-point buckets,
-    * `pbix!Layout[v10]` slicer) — games/wins/rate per band.
+  /** v10 rating bands (`opp_bucket` grain): games/wins/rate per P13
+    * 200-point opponent band, best win rate first.
     */
-  def winRateByOpponentBucket(ctx: FilterContext = FilterContext.empty): DataFrame =
-    model.query(Seq(col("opponent_rating_bucket")),
-                Seq(gamesCount, totalWins, winRate), ctx)
+  def winRateByOpponentBucket(c: DataFrame): DataFrame =
+    c.select(col("opponent_rating_bucket"),
+             col("games").as("games_count"), col("wins").as("total_wins"),
+             winRate)
       .orderBy(col("win_rate").desc, col("opponent_rating_bucket").asc)
 
-  /** v14: Top-5 openings by games, with per-ECO win rate (A7/A8 + F8). */
-  def topOpenings(n: Int = 5,
-                  ctx: FilterContext = FilterContext.empty): DataFrame =
-    model.topNQuery(col("eco"), "eco", n, gamesCount,
-      Seq(gamesCount, winRate), ctx)
+  /** v7 opponents pivot (`opponent` grain): A9/A10 and the rate for the
+    * Top-`n` opponents by games, most games first.
+    */
+  def topOpponents(c: DataFrame, n: Int): DataFrame =
+    topByGames(c, "opponent_username", n)
+      .select(col("opponent_username"), col("games").as("games_count"),
+              col("wins"), winRate)
+      .orderBy(col("games_count").desc, col("opponent_username").asc)
+
+  /** v14 openings (`eco` grain): A7/A8 for the Top-`n` openings by
+    * games, best win rate first.
+    */
+  def topOpenings(c: DataFrame, n: Int): DataFrame =
+    topByGames(c, "eco", n)
+      .select(col("eco"), col("games").as("games_count"), winRate)
       .orderBy(col("win_rate").desc, col("eco").asc)
 
-  /** v6: A11 `Rolling12Days_WinRate` — trailing 12-day win rate on a daily
-    * axis. Aggregates to day grain first, scaffold-joins the generated
-    * DateTable so zero-game days exist in the frame (a row-frame window
-    * over sparse dates would silently widen the window — SURVEY.md §7.4),
-    * then a range frame over epoch-days. The visual plots the measure on
+  /** v6 (`daily` grain): A11 over a trailing `days`-day window.
+    * Scaffold-joins the generated DateTable spanning the grain's min→max
+    * date so zero-game days exist in the frame (a row-frame window over
+    * sparse dates would silently widen the window — SURVEY.md §7.4), then
+    * a range frame over epoch-days. The visual plots the measure on
     * `DateTable.Date Hierarchy.{Year,Month,Day}` (pbix!Layout[v6]), so the
     * dim's year/month/month_name/day attributes ride along in the output —
     * consumers drill the hierarchy without re-deriving date parts.
     */
-  def rollingWinRate(spark: SparkSession, days: Int = 12,
-                     ctx: FilterContext = FilterContext.empty): DataFrame = {
-    val filtered = ctx(fact)
-    val daily = filtered
-      .groupBy(col("date_ymd").as("date"))
-      .agg(count(lit(1)).as("games"), sum(winExpr).as("wins"))
-    Dashboard.rollingFromDaily(spark, daily, days)
-  }
-}
-
-object Dashboard {
-
-  /** The rolling visual's tail from a DAY-GRAIN aggregate
-    * `daily(date, games, wins)`: scaffold-join the spanning DateTable
-    * (zero-game days must exist in the frame), trailing range window,
-    * null-safe rate. Factored out of [[Dashboard.rollingWinRate]] so
-    * the STREAMING dashboard (whose daily grain is maintained
-    * incrementally, [[graft.streaming.StreamingDashboard]]) runs the
-    * IDENTICAL plan over its state — one definition, no batch/stream
-    * drift. The scaffold spans `daily`'s min→max date, which equals
-    * the fact's span (groupBy preserves the distinct date set).
-    */
-  private[graft] def rollingFromDaily(spark: SparkSession, daily: DataFrame,
-                                      days: Int): DataFrame = {
+  def rollingWinRate(spark: SparkSession, c: DataFrame, days: Int): DataFrame = {
+    val daily = c.select(col("date_ymd").as("date"), col("games"), col("wins"))
     val scaffold = DateDim.spanning(spark, daily, "date")
     val dense = scaffold.join(daily, Seq("date"), "left")
       .select(col("date"), col("year"), col("month"), col("month_name"),

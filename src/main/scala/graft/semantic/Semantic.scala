@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
 /** Minimal semantic layer reproducing the reference BI model's query
   * shape (SURVEY.md §3.3): named measures evaluated under an arbitrary
   * conjunction of slicer filters, with optional Top-N-by-measure dimension
-  * filters whose rank itself respects the other active filters.
+  * filters whose rank itself respects the other active filters. It is the
+  * generic form the q17–q19 queries drive over `orders`; the chess
+  * measures A1–A11 are not [[Measure]]s but counter readers in the
+  * [[Dashboard]] companion, which uses only [[FilterContext]] from here.
   *
   * Plans are composed lazily (`FilterContext => DataFrame`) — nothing is
   * materialized per visual, so Catalyst sees ONE tree per query and pushes
@@ -44,21 +47,19 @@ final class SemanticModel(fact: DataFrame) {
   }
 
   /** F7/F8: evaluate measures grouped by `dim`, keeping only the Top-N dim
-    * values ranked by `rankMeasure` (computed under the SAME ctx). The
-    * Top-N key set is tiny → broadcast semi-join, no fact re-shuffle.
+    * values ranked by `rankMeasure` (computed under the SAME ctx), ties
+    * broken by the dim ascending. One aggregate carries the measures and
+    * the rank under a private alias; the sort-limit then reads that
+    * aggregate, so the fact is scanned and shuffled once.
     */
   def topNQuery(dim: Column, dimName: String, n: Int, rankMeasure: Measure,
                 measures: Seq[Measure],
                 ctx: FilterContext = FilterContext.empty): DataFrame = {
-    val filtered = ctx(fact).withColumn(dimName, dim)
-    val top = filtered.groupBy(col(dimName))
-      .agg(rankMeasure.named)
-      .orderBy(col(rankMeasure.name).desc, col(dimName).asc)
+    val rank = "__topn_rank"
+    ctx(fact).groupBy(dim.as(dimName))
+      .agg(rankMeasure.expr.as(rank), measures.map(_.named): _*)
+      .orderBy(col(rank).desc, col(dimName).asc)
       .limit(n)
-      .select(col(dimName))
-    filtered
-      .join(broadcast(top), Seq(dimName), "left_semi")
-      .groupBy(col(dimName))
-      .agg(measures.head.named, measures.tail.map(_.named): _*)
+      .drop(rank)
   }
 }

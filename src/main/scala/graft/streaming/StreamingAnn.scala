@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{Partitioning, Similarity}
 import graft.functions.VectorFunctions._
@@ -130,10 +130,4 @@ object StreamingAnn {
                        tables, planesPerTable)
         (): Unit
       }
-
-  /** Drain everything available and stop (cron-style incremental run). */
-  def runAvailableNow(writer: DataStreamWriter[Row]): Unit = {
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
 }

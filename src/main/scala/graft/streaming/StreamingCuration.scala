@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.GraftOps._
 import graft.queries.CurationQueries
@@ -117,10 +117,4 @@ object StreamingCuration {
         curationBatch(batch, stateRoot, batchId)
         (): Unit
       }
-
-  /** Drain everything available and stop (cron-style incremental run). */
-  def runAvailableNow(writer: DataStreamWriter[Row]): Unit = {
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
 }

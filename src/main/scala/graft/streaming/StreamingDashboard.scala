@@ -1,37 +1,35 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.etl.GameTransforms
 import graft.semantic.{Dashboard, FilterContext}
 
 /** The reference BI dashboard (SURVEY §2.6, `pbix!Layout[v5,v7,v10,v12,
-  * v14,v6]`) maintained INCREMENTALLY over the game stream — the r14
-  * verdict's task #3: the one reference-shaped surface that wasn't yet
-  * streaming. After every micro-batch each visual reads from tiny
-  * per-grain state tables and equals the batch [[Dashboard]] over the
-  * union of every game seen so far (`StreamingDashboardSpec` pins all
-  * six visuals after EVERY batch, plus crash replay as a no-op).
+  * v14,v6]`) maintained INCREMENTALLY over the game stream. After every
+  * micro-batch each visual reads from tiny per-grain state tables and
+  * equals the batch [[Dashboard]] over the union of every game seen so
+  * far (`StreamingDashboardSpec` pins all six visuals after EVERY batch,
+  * plus crash replay as a no-op).
   *
-  * Composition, by the measures' own algebra:
+  * This object only keeps the state. The grains, the counter aggregation
+  * and the six visual readers — the definitions of the measures A1–A11 —
+  * live in the [[Dashboard]] companion, and the readers here hand it the
+  * latest committed state of their grain:
   *
-  *  - All 11 measures (A1–A11) are built from four ADDITIVE counters —
-  *    games/wins/losses/draws — so each visual's grain admits a
-  *    per-key mergeable state: batch partials (a per-batch groupBy)
-  *    sum into the accumulated per-key row. Per batch this costs
-  *    `|batch| + |state keys|`, independent of history — the reason a
-  *    dashboard over a 100 TB game archive can update per micro-batch
-  *    at all. Rates are derived at READ time (wins/games over the
-  *    merged counters), never merged — a rate is not additive.
+  *  - Each grain's state is the four ADDITIVE counters (games, wins,
+  *    losses, draws) per key, so batch partials ([[Dashboard.counters]]
+  *    over the batch) sum into the accumulated per-key row. Per batch this
+  *    costs `|batch| + |state keys|`, independent of history — the reason
+  *    a dashboard over a 100 TB game archive can update per micro-batch at
+  *    all. Rates are derived at read time, never merged.
   *  - The Top-N visuals (v7 opponents, v14 openings) and the rolling
   *    12-day window (v6) are CORPUS-GLOBAL, but over the per-key STATE
   *    (opponents/ECO/days — dimension-sized, not fact-sized), so the
-  *    per-batch recompute is a sort-limit / window over thousands of
-  *    rows. This is the [[StreamingCuration]] stages-4-10 pattern with
-  *    a crucial economy: the global stage reads the AGGREGATED state,
-  *    never the accumulated facts.
+  *    per-read recompute is a sort-limit / window over thousands of rows,
+  *    never over the accumulated facts.
   *
   * State: [[StreamingAgg]]'s versioned-parquet exactly-once discipline —
   * one dir per grain per batch id (`<root>/<grain>/batch=<id>`),
@@ -47,29 +45,8 @@ import graft.semantic.{Dashboard, FilterContext}
   */
 object StreamingDashboard {
 
-  /** The visual grains and their dimension columns over the derived
-    * fact. Every visual below reads exactly one grain.
-    */
-  val Grains: Seq[(String, Seq[String])] = Seq(
-    "global"       -> Nil,
-    "bucket_color" -> Seq("time_control_bucket", "user_color"),
-    "opp_bucket"   -> Seq("opponent_rating_bucket"),
-    "opponent"     -> Seq("opponent_username"),
-    "eco"          -> Seq("eco"),
-    "daily"        -> Seq("date_ymd"))
-
-  private val Counters = Seq("games", "wins", "losses", "draws")
-
-  /** Per-batch partial counters at `dims` grain (A1–A4's additive
-    * bases) over the DERIVED batch.
-    */
-  private def partials(derived: DataFrame, dims: Seq[String]): DataFrame = {
-    import graft.semantic.ChessMeasures.{drawExpr, lossExpr, winExpr}
-    val aggs = Seq(count(lit(1)).as("games"), sum(winExpr).as("wins"),
-                   sum(lossExpr).as("losses"), sum(drawExpr).as("draws"))
-    if (dims.isEmpty) derived.agg(aggs.head, aggs.tail: _*)
-    else derived.groupBy(dims.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
+  /** The grains kept as state: [[Dashboard.Grains]]. */
+  val Grains: Seq[(String, Seq[String])] = Dashboard.Grains
 
   /** Counter-sum merge of accumulated state ∪ batch partials — the
     * additive-measure form of [[graft.operators.IncrementalAgg]]'s
@@ -77,10 +54,9 @@ object StreamingDashboard {
     */
   private def merge(prev: DataFrame, part: DataFrame,
                     dims: Seq[String]): DataFrame = {
-    val u = prev.unionByName(part)
-    val sums = Counters.map(c => sum(col(c)).as(c))
-    if (dims.isEmpty) u.agg(sums.head, sums.tail: _*)
-    else u.groupBy(dims.map(col): _*).agg(sums.head, sums.tail: _*)
+    val sums = Dashboard.Counters.map(c => sum(col(c)).as(c))
+    prev.unionByName(part).groupBy(dims.map(col): _*)
+      .agg(sums.head, sums.tail: _*)
   }
 
   /** One micro-batch of RAW game rows into all six grain states.
@@ -94,7 +70,7 @@ object StreamingDashboard {
     val derived = ctx(GameTransforms.withDerived(batch)).cache()
     try {
       Grains.foreach { case (grain, dims) =>
-        val part = partials(derived, dims)
+        val part = Dashboard.counters(derived, dims)
         val merged = StreamingAgg
           .latestState(s, s"$stateRoot/$grain", beforeBatchId = batchId) match {
           case Some((_, prev)) => merge(prev, part, dims)
@@ -123,17 +99,9 @@ object StreamingDashboard {
         (): Unit
       }
 
-  /** Drain everything available and stop (cron-style incremental run). */
-  def runAvailableNow(writer: DataStreamWriter[Row]): Unit = {
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
   // ------------------------------------------------------- the visuals
-  // Each reader consumes ONLY the latest committed state of its grain,
-  // with the SAME output columns and ordering as the batch Dashboard
-  // method it mirrors. `win_rate` is derived here exactly as
-  // ChessMeasures.winRate derives it from the same counters.
+  // Each reader hands the latest committed state of its grain to the
+  // Dashboard companion's reader of the same name.
 
   private def state(spark: SparkSession, stateRoot: String,
                     grain: String): DataFrame =
@@ -143,68 +111,32 @@ object StreamingDashboard {
         s"no committed dashboard state under $stateRoot/$grain — " +
           "run at least one batch first"))
 
-  private def rate(wins: Column, games: Column): Column =
-    wins.cast("double") / nullif(games, lit(0L))
-
   /** v5/v11 KPI cards: ≡ [[Dashboard.cards]]. */
   def cards(spark: SparkSession, stateRoot: String): DataFrame =
-    state(spark, stateRoot, "global").select(
-      col("games").as("total_games"), col("wins").as("total_wins"),
-      col("losses").as("total_losses"), col("draws").as("total_draws"),
-      rate(col("wins"), col("games")).as("win_rate"))
+    Dashboard.cards(state(spark, stateRoot, "global"))
 
   /** v12 matrix: ≡ [[Dashboard.winRateByBucketAndColor]]. */
   def winRateByBucketAndColor(spark: SparkSession,
                               stateRoot: String): DataFrame =
-    state(spark, stateRoot, "bucket_color").select(
-        col("time_control_bucket"), col("user_color"),
-        col("games").as("games_count"), col("wins").as("total_wins"),
-        rate(col("wins"), col("games")).as("win_rate"))
-      .orderBy(col("win_rate").desc, col("time_control_bucket").asc,
-               col("user_color").asc)
+    Dashboard.winRateByBucketAndColor(state(spark, stateRoot, "bucket_color"))
 
   /** v10 rating bands: ≡ [[Dashboard.winRateByOpponentBucket]]. */
   def winRateByOpponentBucket(spark: SparkSession,
                               stateRoot: String): DataFrame =
-    state(spark, stateRoot, "opp_bucket").select(
-        col("opponent_rating_bucket"),
-        col("games").as("games_count"), col("wins").as("total_wins"),
-        rate(col("wins"), col("games")).as("win_rate"))
-      .orderBy(col("win_rate").desc, col("opponent_rating_bucket").asc)
+    Dashboard.winRateByOpponentBucket(state(spark, stateRoot, "opp_bucket"))
 
-  /** v7 Top-N opponents: ≡ [[Dashboard.topOpponents]] — rank by games
-    * (desc, name asc — the batch topNQuery's total order) over the
-    * per-opponent state, then the visual's own ordering.
-    */
+  /** v7 Top-N opponents: ≡ [[Dashboard.topOpponents]]. */
   def topOpponents(spark: SparkSession, stateRoot: String,
                    n: Int = 10): DataFrame =
-    state(spark, stateRoot, "opponent")
-      .orderBy(col("games").desc, col("opponent_username").asc)
-      .limit(n)
-      .select(col("opponent_username"), col("games").as("games_count"),
-              col("wins"), rate(col("wins"), col("games")).as("win_rate"))
-      .orderBy(col("games_count").desc, col("opponent_username").asc)
+    Dashboard.topOpponents(state(spark, stateRoot, "opponent"), n)
 
-  /** v14 Top-N openings: ≡ [[Dashboard.topOpenings]] — rank by games,
-    * present by win rate.
-    */
+  /** v14 Top-N openings: ≡ [[Dashboard.topOpenings]]. */
   def topOpenings(spark: SparkSession, stateRoot: String,
                   n: Int = 5): DataFrame =
-    state(spark, stateRoot, "eco")
-      .orderBy(col("games").desc, col("eco").asc)
-      .limit(n)
-      .select(col("eco"), col("games").as("games_count"),
-              rate(col("wins"), col("games")).as("win_rate"))
-      .orderBy(col("win_rate").desc, col("eco").asc)
+    Dashboard.topOpenings(state(spark, stateRoot, "eco"), n)
 
-  /** v6 rolling 12-day win rate: ≡ [[Dashboard.rollingWinRate]] — the
-    * IDENTICAL [[Dashboard.rollingFromDaily]] tail (scaffold join,
-    * range window) over the maintained daily grain.
-    */
+  /** v6 rolling 12-day win rate: ≡ [[Dashboard.rollingWinRate]]. */
   def rollingWinRate(spark: SparkSession, stateRoot: String,
-                     days: Int = 12): DataFrame = {
-    val daily = state(spark, stateRoot, "daily")
-      .select(col("date_ymd").as("date"), col("games"), col("wins"))
-    Dashboard.rollingFromDaily(spark, daily, days)
-  }
+                     days: Int = 12): DataFrame =
+    Dashboard.rollingWinRate(spark, state(spark, stateRoot, "daily"), days)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{Dedup, Membership}
 import graft.GraftOps._
@@ -271,10 +271,4 @@ object StreamingDedup {
                                minLen, n, num, den)
         (): Unit
       }
-
-  /** Drain everything available and stop (cron-style incremental run). */
-  def runAvailableNow(writer: DataStreamWriter[Row]): Unit = {
-    val q = writer.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
 }

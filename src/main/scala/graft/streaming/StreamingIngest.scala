@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
-import graft.etl.{GameTransforms, GamesStore, Schemas}
+import graft.etl.{ArchiveSource, GameTransforms, GamesStore}
 
 /** Structured Streaming variant of the ingest pipeline (SURVEY.md §2.10):
   * the reference's periodic incremental batch (daily cron + `state.json`
@@ -27,19 +27,16 @@ import graft.etl.{GameTransforms, GamesStore, Schemas}
 object StreamingIngest {
 
   /** Streaming read of archive-payload JSON files landing in `landingDir`
-    * (one archive document per file), exploded to raw games. Schema is
-    * explicit — required for streaming sources and identical to the batch
-    * reader's (`ArchiveSource.readLanding`).
+    * (one archive document per file), exploded to raw games — the batch
+    * reader's projection ([[ArchiveSource.landing]]) over a file-source
+    * stream. The explicit schema streaming sources require comes from it.
     */
   def readLandingStream(spark: SparkSession, landingDir: String,
                         maxFilesPerTrigger: Int = 16): DataFrame =
-    spark.readStream
-      .schema(Schemas.archiveType)
-      .option("multiLine", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(landingDir)
-      .withColumn("archive_url", input_file_name())
-      .select(col("archive_url"), explode_outer(col("games")).as("game"))
+    ArchiveSource.landing((schema, options) =>
+      spark.readStream.schema(schema).options(options)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .json(landingDir))
 
   /** Full streaming pipeline: landing files → projected 13-col fact rows →
     * idempotent batch append into the store.

@@ -415,10 +415,20 @@ class PlanShapeSpec extends SparkSpec {
 
   test("semantic Top-N query respects the filter context in the rank") {
     val plan = finalPlan(SemanticQueries.q19SemanticTopN(spark, sf))
-    assert(plan.contains("LeftSemi"))
-    // date filter must appear below the aggregate (pushed into both the
-    // rank subquery and the measure query), not applied after it
-    assert(plan.contains("PushedFilters") || plan.contains("Filter"))
+    // one aggregate carries the rank and the measures: no join back to
+    // the fact, and the Top-N is a sort-limit over that aggregate
+    assert(!plan.contains("Join"), s"Top-N must not join:\n$plan")
+    assert("HashAggregate".r.findAllIn(plan).size == 2,
+      s"one aggregate (partial + final):\n$plan")
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    // the date filter sits below the aggregate (the plan string prints
+    // children after parents), so the rank sees the filtered fact
+    val lines = plan.linesIterator.toSeq
+    val agg = lines.lastIndexWhere(_.contains("HashAggregate"))
+    val filter = lines.indexWhere(l =>
+      l.contains("Filter (") && l.contains("o_orderdate"))
+    assert(agg >= 0 && filter > agg,
+      s"the date filter must be applied before the aggregate:\n$plan")
   }
 
   test("q133: bigram LM is hash joins + hash aggs — no sort-merge, " +

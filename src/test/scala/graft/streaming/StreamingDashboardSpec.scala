@@ -101,6 +101,27 @@ class StreamingDashboardSpec extends SparkSpec {
     assertVisualsEqual(parts(0).unionByName(parts(1)), root, ctx, "ctx")
   }
 
+  test("a null-ECO group inside the Top-5 openings is kept by batch and " +
+       "stream alike (the BI \"(Blank)\" member)") {
+    val root = Files.createTempDirectory("graft-sdash-blank").toString
+    // the empty PGNs of odd days become null: eco "" and eco null are
+    // two of five groups, so both rank inside the Top-5
+    val blank = fact.withColumn("pgn",
+      when(col("pgn") === "" && pmod(dayofmonth(col("date_ymd")), lit(2)) === 1,
+           lit(null).cast("string"))
+        .otherwise(col("pgn")))
+    val parts = (0 until 2).map(k =>
+      blank.filter(pmod(col("white_rating"), lit(2L)) === k))
+    StreamingDashboard.dashboardBatch(parts(0), root, 0L)
+    StreamingDashboard.dashboardBatch(parts(1), root, 1L)
+    val union = parts(0).unionByName(parts(1))
+    assertVisualsEqual(union, root, FilterContext.empty, "blank")
+    val ecos = new Dashboard(union).topOpenings(5).collect()
+      .map(r => Option(r.getAs[String]("eco"))).toSet
+    assert(ecos.contains(None) && ecos.contains(Some("")),
+           s"both blank ECO groups must be in the Top-5: $ecos")
+  }
+
   test("the foreachBatch stream wires the same per-batch maintenance " +
        "(MemoryStream, two batches)") {
     val root = Files.createTempDirectory("graft-sdash-stream").toString
