@@ -1,19 +1,23 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Idempotent parquet-backed store for the games fact, ledger, and status
   * log (SURVEY.md §2.2 K1–K4, §2.4 F1).
   *
-  * Dedup strategy at scale: the candidate batch is LEFT ANTI joined against
-  * the existing `game_url` key set. The key scan is column-pruned (Catalyst
-  * reads only the key column from parquet), and the batch side — always the
-  * small side during incremental ingest — is broadcast, so the existing
-  * table is never shuffled. On a 100 TB fact the anti-join would instead be
-  * scoped to the partitions the ledger says may overlap (archive-month
-  * partition pruning); the operator shape is identical.
+  * Dedup plan: the candidate batch is LEFT ANTI joined against the stored
+  * `game_url` key set. The key scan is column-pruned (Catalyst reads only
+  * the key column from parquet), and Spark plans the join as a
+  * `BroadcastHashJoin … LeftAnti, BuildRight`: the STORE's keys are the
+  * broadcast side, collected to the driver and shipped to every task,
+  * while the batch streams through without a shuffle. That holds while the
+  * key set fits under the broadcast threshold; past it the join becomes a
+  * sort-merge join that shuffles the whole key column every run. A
+  * bucketed (or archive-month-scoped) probe for such stores is an open
+  * item, not built here.
   */
 final class GamesStore(root: String) extends Serializable {
 
@@ -66,10 +70,14 @@ final class GamesStore(root: String) extends Serializable {
   def ledger(spark: SparkSession): DataFrame = spark.read.parquet(ledgerPath)
   def status(spark: SparkSession): DataFrame = spark.read.parquet(statusPath)
 
-  /** S4: existing dedup keys — a column-pruned distinct scan. */
+  /** S4: existing dedup keys — a column-pruned scan. No `distinct`: the
+    * store holds each key once, and the anti-join's result is the same
+    * with repeated keys, so deduping them would only add an aggregate and
+    * an exchange over every stored key before the broadcast.
+    */
   def existingGameUrls(spark: SparkSession): DataFrame =
     games(spark).select("game_url")
-      .filter(length(trim(col("game_url"))) > 0).distinct()
+      .filter(length(trim(col("game_url"))) > 0)
 
   // --------------------------------------------------------------- writes
 
@@ -77,7 +85,9 @@ final class GamesStore(root: String) extends Serializable {
     * already exists (cross-run dedup) and duplicates within the batch
     * itself (intra-batch dedup), keeping rows with empty urls — the
     * reference appends those untracked (`fetch_and_post.py:362-370`).
-    * Returns the number of rows appended.
+    * Of a batch's rows sharing a `game_url`, the first by `firstBy` lands.
+    * Returns the number of rows appended per `username`, read from the
+    * staged parquet.
     *
     * The deduped batch is STAGED to a temp dir before the append: the
     * dedup plan reads `gamesPath` (the anti-join side), so appending from
@@ -88,12 +98,15 @@ final class GamesStore(root: String) extends Serializable {
     * severs the read-write cycle deterministically; the append then only
     * reads the staging dir.
     */
-  def appendGames(spark: SparkSession, batch: DataFrame): Long = {
+  def appendGames(spark: SparkSession, batch: DataFrame,
+                  firstBy: Seq[Column] = Seq(col("archive_url"))): Map[String, Long] = {
     val keyed   = batch.filter(length(trim(col("game_url"))) > 0)
     val unkeyed = batch.filter(length(trim(col("game_url"))) <= 0)
     val fresh = keyed
-      .dropDuplicates("game_url")
       .join(existingGameUrls(spark), Seq("game_url"), "left_anti")
+      .withColumn("_first", row_number().over(
+        Window.partitionBy(col("game_url")).orderBy(firstBy: _*)))
+      .filter(col("_first") === 1)
       .select(batch.columns.map(col).toSeq: _*)
       .union(unkeyed)
     val stagingPath =
@@ -101,9 +114,10 @@ final class GamesStore(root: String) extends Serializable {
     fresh.write.mode("overwrite").parquet(stagingPath)
     try {
       val staged = spark.read.parquet(stagingPath)
-      val n = staged.count() // parquet footer counts — no recompute
-      if (n > 0) staged.write.mode("append").parquet(gamesPath)
-      n
+      val appended = staged.groupBy(col("username")).count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (appended.nonEmpty) staged.write.mode("append").parquet(gamesPath)
+      appended
     } finally {
       val p = new org.apache.hadoop.fs.Path(stagingPath)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -112,11 +126,10 @@ final class GamesStore(root: String) extends Serializable {
   }
 
   /** K2: ledger append, BATCHED — one append job (one file) per call,
-    * however many archives it covers. Per-row appends write a one-row
-    * parquet file each; a 10k-archive backfill would litter the table with
-    * 20k+ tiny files whose footers dominate every later scan. Durability
-    * stays per-archive where it matters — in the state file (K5) — while
-    * the ledger flushes once per user.
+    * however many archives it covers; an ingest run makes one call for
+    * all its users. Per-row appends write a one-row parquet file each; a
+    * 10k-archive backfill would litter the table with 20k+ tiny files
+    * whose footers dominate every later scan.
     */
   def appendLedgerRows(spark: SparkSession,
                        rows: Seq[(String, String, Long)]): Unit = {
@@ -131,15 +144,15 @@ final class GamesStore(root: String) extends Serializable {
 
   /** K3: best-effort status append, batched like the ledger (errors
     * swallowed, like the reference — a failed log line must never fail the
-    * run). Row shape: (stage, message, httpStatus).
+    * run). Row shape: (username, stage, message, httpStatus).
     */
-  def appendStatusRows(spark: SparkSession, runId: String, username: String,
-                       rows: Seq[(String, String, String)]): Unit =
+  def appendStatusRows(spark: SparkSession, runId: String,
+                       rows: Seq[(String, String, String, String)]): Unit =
     try {
       if (rows.isEmpty) return
       import spark.implicits._
       val ts = new java.sql.Timestamp(System.currentTimeMillis())
-      rows.map { case (stage, msg, http) => (runId, username, stage, msg, http, ts) }
+      rows.map { case (user, stage, msg, http) => (runId, user, stage, msg, http, ts) }
         .toDF("run_id", "username", "stage", "message", "http_status",
               "timestamp_utc")
         .coalesce(1)
@@ -148,5 +161,5 @@ final class GamesStore(root: String) extends Serializable {
 
   def appendStatus(spark: SparkSession, runId: String, username: String,
                    stage: String, message: String, httpStatus: String): Unit =
-    appendStatusRows(spark, runId, username, Seq((stage, message, httpStatus)))
+    appendStatusRows(spark, runId, Seq((username, stage, message, httpStatus)))
 }

@@ -3,18 +3,28 @@ package graft.etl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** End-to-end incremental ingest run (SURVEY.md §3.1 lifecycle).
+/** End-to-end incremental ingest run (SURVEY.md §3.1 lifecycle), one
+  * distributed pass over every pending user.
   *
-  * Per user: list archives → skip already-processed (F2) → fetch payloads
-  * (distributed, S3) → project + dedup-append (P1/F1/K1) → ledger (K2) →
-  * advance watermark + save state (O5/K5). Write ordering matches the
-  * reference: data append BEFORE ledger append, so a crash between the two
-  * re-processes the archive next run and the anti-join dedup makes that
+  * The driver lists every user's archives (S2) and skips the processed
+  * ones (F2). The rest costs a fixed set of Spark jobs however many users
+  * the CSV names: one distributed fetch of every pending (user, archive)
+  * pair (S3), one per-archive aggregate (fetch status, game count, newest
+  * `end_time`), one dedup-append of all users' games (P1/F1/K1), one
+  * ledger append (K2), one status append (K3) and one atomic state save
+  * (O5/K5). Per-user Spark passes would cost about twenty jobs a user,
+  * and on a daily run's few hundred games that framework cost, not the
+  * data, is the run's time.
+  *
+  * Write ordering matches the reference: data, then ledger, then state.
+  * A crash anywhere leaves the state file as the last run saved it, so
+  * the next run re-processes the same archives, and the anti-joins on the
+  * games (`game_url`) and the ledger (archive, count) make that replay
   * idempotent (at-least-once + dedup = effectively-once, §2.10).
   *
-  * Unlike the reference's one-archive-at-a-time loop, unprocessed archives
-  * for a user are fetched in ONE distributed pass; per-archive game counts
-  * come from a single groupBy rather than N driver round-trips.
+  * A game present in several users' archives lands under the first of
+  * them in CSV order, from its earliest archive: the row the reference's
+  * user-by-user loop appends first.
   */
 final class IngestJob(
     spark: SparkSession,
@@ -23,123 +33,108 @@ final class IngestJob(
     stateStore: StateStore,
     baseUrl: String = "https://api.chess.com") {
 
+  import IngestJob.Fetched
+
   def run(usernamesCsv: String, runId: String = java.util.UUID.randomUUID().toString)
       : Map[String, UserState] = {
-    // S6: CSV param parse — split, strip, drop empties
-    val users = usernamesCsv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    // S6: CSV param parse — split, strip, drop empties; a repeated name
+    // is processed once
+    val users = usernamesCsv.split(",").map(_.trim).filter(_.nonEmpty).distinct.toSeq
     store.ensureAll(spark)
-    var state = stateStore.load()
+    val state = stateStore.load()
 
-    users.foreach { user =>
-      ArchiveSource.listArchives(fetcher, baseUrl, user) match {
-        case Left(status) =>
-          store.appendStatus(spark, runId, user, Stages.ErrorFetchArchives,
-            s"archive list fetch failed", status.toString)
-        case Right(archives) =>
-          val prior = state.getOrElse(user, UserState(0L, Vector.empty))
-          val todo = archives.filterNot(prior.processedArchives.toSet)
-          if (todo.nonEmpty) {
-            state = processArchives(user, todo, prior, runId, state)
+    val listed = users.map(u => u -> ArchiveSource.listArchives(fetcher, baseUrl, u))
+    val todo = listed.collect { case (u, Right(archives)) =>
+      val done = state.get(u).fold(Set.empty[String])(_.processedArchives.toSet)
+      u -> archives.filterNot(done).sorted // chronological (O1-stable)
+    }.filter(_._2.nonEmpty)
+    val (fetched, appended) =
+      if (todo.isEmpty) (Map.empty[(String, String), Fetched], Map.empty[String, Long])
+      else fetchAndAppend(users, todo)
+    val ok = todo.map { case (u, urls) => u -> urls.filter(url => fetched((u, url)).ok) }
+
+    // K2: one ledger append for the run, minus the (user, archive, count)
+    // rows the ledger already holds. A replay's row carries a fresh
+    // processed_at_utc, so without this filter it would double-count every
+    // `game_count` aggregate over K2. Keyed on the count, not the archive
+    // alone, so a deliberate reprocess-latest that FOUND new games still
+    // records the updated total; one whose content changed but whose count
+    // did not records nothing here, and its visibility lives in the status
+    // log (ArchiveProcessed rows are written per run regardless). The
+    // anti-join runs in Spark: only this run's candidates reach the driver.
+    import spark.implicits._
+    val candidates = for ((u, urls) <- ok; url <- urls) yield (u, url, fetched((u, url)).games)
+    val unrecorded = candidates
+      .toDF("username", "archive_url", "game_count")
+      .join(store.ledger(spark).select(col("username"), col("archive_url"),
+              col("game_count").cast("long").as("game_count")),
+            Seq("username", "archive_url", "game_count"), "left_anti")
+      .as[(String, String, Long)].collect().toSet
+    store.appendLedgerRows(spark, candidates.filter(unrecorded))
+
+    // K3: one status append for the run, each user's rows in CSV order
+    val pending = todo.toMap
+    store.appendStatusRows(spark, runId, listed.flatMap {
+      case (u, Left(status)) =>
+        Seq((u, Stages.ErrorFetchArchives, "archive list fetch failed", status.toString))
+      case (u, Right(_)) =>
+        val (good, failed) = pending.getOrElse(u, Nil).partition(url => fetched((u, url)).ok)
+        failed.map(url => (u, Stages.ErrorArchiveDownload, url, fetched((u, url)).status.toString)) ++
+          appended.get(u).filter(_ > 0).map(n => (u, Stages.GamesAppended, s"$n games", "200")) ++
+          good.flatMap { url =>
+            val noGames =
+              if (fetched((u, url)).games == 0L) Seq((u, Stages.ArchiveNoGames, url, "200"))
+              else Nil
+            noGames :+ ((u, Stages.ArchiveProcessed, url, "200"))
           }
-      }
+    })
+
+    // K5: one atomic save, after the data and ledger it records. The
+    // reference saves after every archive, but each of those saves follows
+    // writes this run has already made, so a crash before this line
+    // replays the same archives either way, and the dedups absorb it.
+    val next = ok.foldLeft(state) { case (st, (u, urls)) =>
+      val prior = st.getOrElse(u, UserState(0L, Vector.empty))
+      st.updated(u, UserState(
+        lastEndTime = (prior.lastEndTime +: urls.map(url => fetched((u, url)).maxEnd)).max, // O5 monotone
+        processedArchives = prior.processedArchives ++ urls))
     }
-    state
+    if (todo.nonEmpty) stateStore.save(next)
+    next
   }
 
-  /** Fetch + append all pending archives for one user in one distributed
-    * pass, then advance state per archive (chronological order, O1-stable).
+  /** Fetch every pending archive in one distributed pass and append the
+    * new games. Returns what each fetched (user, archive) held, from one
+    * aggregate over the cached fetch, and the games appended per user.
     */
-  private def processArchives(
-      user: String, todo: Seq[String], prior: UserState, runId: String,
-      state: Map[String, UserState]): Map[String, UserState] = {
-
+  private def fetchAndAppend(users: Seq[String], todo: Seq[(String, Seq[String])])
+      : (Map[(String, String), Fetched], Map[String, Long]) = {
     val raw = ArchiveSource
-      .readArchives(spark, fetcher, todo.map(user -> _))
+      .readArchives(spark, fetcher, for ((u, urls) <- todo; url <- urls) yield u -> url)
       .cache()
     try {
-      val failed = raw.filter(col("fetch_status") =!= 200)
-        .select("archive_url", "fetch_status").distinct().collect()
-      store.appendStatusRows(spark, runId, user,
-        failed.toSeq.map(r => (Stages.ErrorArchiveDownload,
-          r.getString(0), r.getInt(1).toString)))
-      val failedUrls = failed.map(_.getString(0)).toSet
-
+      val fetched = raw.groupBy(col("username"), col("archive_url"))
+        .agg(max(col("fetch_status")), count(col("game")), max(col("game.end_time")))
+        .collect()
+        .map(r => (r.getString(0), r.getString(1)) ->
+          Fetched(r.getInt(2), r.getLong(3), if (r.isNullAt(4)) 0L else r.getLong(4)))
+        .toMap
       val games = GameTransforms.projectFact(
         raw.filter(col("fetch_status") === 200 && col("game").isNotNull))
-      val appended = store.appendGames(spark, games)
-      if (appended > 0)
-        store.appendStatus(spark, runId, user, Stages.GamesAppended,
-          s"$appended games", "200")
+      // first to land: the earliest user in CSV order, then the earliest archive
+      val appended = store.appendGames(spark, games,
+        Seq(array_position(typedLit(users), col("username")), col("archive_url")))
+      (fetched, appended)
+    } finally raw.unpersist(blocking = true)
+  }
+}
 
-      // per-archive counts for the ledger (single agg, not N queries)
-      val counts = raw.filter(col("fetch_status") === 200)
-        .groupBy(col("archive_url"))
-        .agg(sum(when(col("game").isNotNull, 1).otherwise(0)).as("n"),
-             max(col("game.end_time")).as("max_end"))
-        .collect()
-        .map(r => r.getString(0) ->
-          (r.getAs[Long]("n"), Option(r.getAs[Any]("max_end"))
-            .map(_.toString.toLong).getOrElse(0L)))
-        .toMap
+object IngestJob {
 
-      // Ledger + status flush ONCE per user (chronological row order kept):
-      // the per-row form wrote two one-row parquet files per archive — a
-      // 10k-archive backfill is 20k+ tiny files. A crash between this
-      // append and the state loop below re-processes the batch next run
-      // (state-driven skip never advanced); the games side is absorbed by
-      // the anti-join dedup, and the LEDGER dedupes here against its own
-      // existing (archive, count) rows — a replay row carries a fresh
-      // processed_at_utc, so without this filter it would double-count
-      // every `game_count` aggregate over K2. Keyed on (archive, count)
-      // rather than archive alone so a deliberate reprocess-latest that
-      // FOUND new games still records the updated total.
-      val ok = todo.sorted.filterNot(failedUrls)
-      // Replay dedup is pushed into Spark as a LEFT ANTI join: the full
-      // per-user ledger history never collects to the driver — only the
-      // surviving candidates do, and those are bounded by THIS run's
-      // archive list. K2 contract note: a deliberate reprocess whose
-      // content changed but whose game count did not is indistinguishable
-      // from a replay here and records no new ledger row; reprocess
-      // visibility lives in the status log (ArchiveProcessed rows are
-      // written per run regardless).
-      import spark.implicits._
-      val fresh = ok
-        .map(url => (user, url, counts.getOrElse(url, (0L, 0L))._1))
-        .toDF("username", "archive_url", "game_count")
-        .join(store.ledger(spark).filter(col("username") === user)
-                .select(col("archive_url"),
-                        col("game_count").cast("long").as("game_count")),
-              Seq("archive_url", "game_count"), "left_anti")
-        .select("username", "archive_url", "game_count")
-        .as[(String, String, Long)].collect().toSeq
-        .sortBy(_._2) // restore chronological (sorted-url) row order
-      store.appendLedgerRows(spark, fresh)
-      store.appendStatusRows(spark, runId, user, ok.flatMap { url =>
-        val noGames =
-          if (counts.getOrElse(url, (0L, 0L))._1 == 0L)
-            Seq((Stages.ArchiveNoGames, url, "200"))
-          else Nil
-        noGames :+ ((Stages.ArchiveProcessed, url, "200"))
-      })
-
-      // advance state chronologically, archive by archive (K5 durability —
-      // the per-archive boundary stays HERE, in the state file). A Set
-      // mirrors the Vector for membership so a 10k-archive backfill is
-      // O(n) total, not the O(n²) of re-running `.distinct` per archive;
-      // the Vector keeps the reference's sorted append order.
-      var st = prior
-      var seen = prior.processedArchives.toSet
-      ok.foreach { url =>
-        val (_, maxEnd) = counts.getOrElse(url, (0L, 0L))
-        st = UserState(
-          lastEndTime = math.max(st.lastEndTime, maxEnd), // O5 monotone watermark
-          processedArchives =
-            if (seen(url)) st.processedArchives
-            else st.processedArchives :+ url)
-        seen += url
-        stateStore.save(state.updated(user, st))
-      }
-      state.updated(user, st)
-    } finally raw.unpersist()
+  /** One fetched archive: its fetch status, game count and newest
+    * `end_time` (0 when it holds no games).
+    */
+  private final case class Fetched(status: Int, games: Long, maxEnd: Long) {
+    def ok: Boolean = status == 200
   }
 }

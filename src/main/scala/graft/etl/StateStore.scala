@@ -11,9 +11,13 @@ import scala.jdk.CollectionConverters._
 /** Watermark/checkpoint state (SURVEY.md §2.1 S5, §2.2 K5, §2.10).
   *
   * Mirrors the reference's `state.json`: per-user `last_end_time` high
-  * watermark plus the processed-archives ledger, saved after EVERY archive
-  * for incremental durability (`fetch_and_post.py:286-291,409-413`).
-  * Writes are atomic (temp file + rename) so a crash never leaves a
+  * watermark plus the processed archives. The reference saves it after
+  * EVERY archive (`fetch_and_post.py:286-291,409-413`); [[IngestJob]]
+  * saves it once per run, after that run's games and ledger rows are
+  * written. The recovery is the same: every per-archive save followed
+  * writes the run had already made, so a crash before the one save
+  * re-processes the same archives, which the games and ledger dedups
+  * absorb. Writes are atomic (temp file + rename) so a crash never leaves a
   * truncated state file. In a streaming deployment this role is played by
   * the Structured Streaming checkpoint; the explicit store keeps batch
   * runs resumable without one.

@@ -1,6 +1,9 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
 
@@ -25,11 +28,62 @@ class IngestJobSpec extends SparkSpec {
       Right(s"""{"archives":[${urls.map("\"" + _ + "\"").mkString(",")}]}""")
 
   private def freshEnv(pages: Map[String, Either[Int, String]]) = {
+    val (job, store, states, _) = freshEnvAt(pages)
+    (job, store, states)
+  }
+
+  /** [[freshEnv]] plus the directory holding the store and state file. */
+  private def freshEnvAt(pages: Map[String, Either[Int, String]]) = {
     val dir = Files.createTempDirectory("graft-ingest").toString
     val store = new GamesStore(s"$dir/warehouse")
     val states = new StateStore(s"$dir/state.json")
     val job = new IngestJob(spark, MapFetcher(pages), store, states, base)
-    (job, store, states)
+    (job, store, states, dir)
+  }
+
+  private def archive(user: String, month: String) =
+    s"$base/pub/player/$user/games/2025/$month"
+
+  /** One user's two monthly archives: two games, then one, with game urls
+    * unique to the user and `extra` games added to the first month.
+    */
+  private def userPages(user: String, extra: String*): Map[String, Either[Int, String]] = {
+    val (m1, m2) = (archive(user, "07"), archive(user, "08"))
+    val first = Seq(game(s"$user-g1", 100, "1-0"), game(s"$user-g2", 200, "0-1")) ++ extra
+    Map(archivesFor(user, m1, m2),
+      m1 -> Right(s"""{"games":[${first.mkString(",")}]}"""),
+      m2 -> Right(s"""{"games":[${game(s"$user-g3", 300, "1/2-1/2")}]}"""))
+  }
+
+  /** Spark jobs started while `body` runs. Listener events arrive
+    * asynchronously but in order, so the body's jobs are the ones started
+    * between a marker job run before it and one run after it.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-before")
+      body
+      marker("jobs-after")
+      val seen = scala.collection.mutable.Buffer.empty[String]
+      while (!seen.contains("jobs-after")) {
+        val d = starts.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+        assert(d != null, "listener never saw the closing marker job")
+        seen += d
+      }
+      seen.dropWhile(_ != "jobs-before").tail.takeWhile(_ != "jobs-after").size
+    } finally sc.removeSparkListener(listener)
   }
 
   private val a1 = s"$base/pub/player/alice/games/2025/07"
@@ -60,7 +114,7 @@ class IngestJobSpec extends SparkSpec {
       new java.io.File(path).listFiles
         .count(f => f.getName.endsWith(".parquet") && f.length() > 0)
     assert(dataFiles(store.ledgerPath) <= 2,
-      "ledger rows must be batched per user, not written per archive")
+      "ledger rows must be batched per run, not written per archive")
   }
 
   test("idempotency: rerunning the same archives appends nothing") {
@@ -197,5 +251,125 @@ class IngestJobSpec extends SparkSpec {
     assert(g.game_url == "g1" && g.username == "alice")
     assert(g.white_rating.contains(1500) && g.black_rating.contains(1480))
     assert(g.result == "1-0")
+  }
+
+  test("one run costs the same Spark jobs for one user as for three") {
+    val users = Seq("ann", "ben", "cal")
+    def jobs(csv: Seq[String]): Int = {
+      val (job, store, _) = freshEnv(csv.map(userPages(_)).reduce(_ ++ _))
+      val n = jobsDuring(job.run(csv.mkString(",")))
+      assert(store.games(spark).count() == 3L * csv.size)
+      n
+    }
+    val one = jobs(users.take(1))
+    val three = jobs(users)
+    assert(one > 0)
+    assert(three == one,
+      s"an ingest run must not cost Spark jobs per user: 1 user $one jobs, 3 users $three")
+  }
+
+  test("a game in two users' archives lands under the first user in CSV order") {
+    val shared = game("shared", 150, "1-0")
+    val pages = userPages("alice", shared) ++ userPages("bob", shared)
+    def owner(csv: String): (String, String) = {
+      val (job, store, _) = freshEnv(pages)
+      job.run(csv)
+      val rows = store.games(spark).filter(col("game_url") === "shared").collect()
+      assert(rows.length == 1, s"$csv: the shared game is stored once")
+      (rows(0).getAs[String]("username"), rows(0).getAs[String]("archive_url"))
+    }
+    assert(owner("bob,alice") == ("bob", archive("bob", "07")))
+    assert(owner("alice,bob") == ("alice", archive("alice", "07")))
+  }
+
+  test("within one user, a game in two archives lands from the earliest archive") {
+    val pages = Map(
+      archivesFor("alice", a1, a2),
+      a2 -> Right(s"""{"games":[${game("g2", 200, "0-1")}]}"""),
+      a1 -> Right(s"""{"games":[${game("g2", 200, "0-1")},${game("g1", 100, "1-0")}]}"""))
+    val (job, store, _) = freshEnv(pages)
+    job.run("alice")
+    val rows = store.games(spark).filter(col("game_url") === "g2").collect()
+    assert(rows.map(_.getAs[String]("archive_url")).toSeq == Seq(a1))
+  }
+
+  test("a name repeated in the CSV is processed once") {
+    val pages = Map(
+      archivesFor("alice", a1, a2),
+      a1 -> Left(503),
+      a2 -> Right(s"""{"games":[${game("g1", 100, "1-0")}]}"""))
+    val (job, store, _) = freshEnv(pages)
+    job.run("alice, alice,alice")
+    val ledger = store.ledger(spark).collect()
+      .map(r => (r.getAs[String]("archive_url"), r.getAs[Int]("game_count")))
+    assert(ledger.toSeq == Seq((a2, 1)))
+    val status = store.status(spark).collect()
+      .map(r => (r.getAs[String]("username"), r.getAs[String]("stage"), r.getAs[String]("message")))
+      .toSeq
+    assert(status.sorted == Seq(
+      ("alice", Stages.ArchiveProcessed, a2),
+      ("alice", Stages.ErrorArchiveDownload, a1),
+      ("alice", Stages.GamesAppended, "1 games")).sorted)
+    assert(store.games(spark).count() == 1)
+  }
+
+  /** K5: a run that crashes after some of its writes, replayed once the
+    * cause is gone, leaves the store and state a clean run leaves.
+    */
+  private def assertReplayEqualsCleanRun(
+      obstacle: (GamesStore, String) => java.nio.file.Path,
+      cause: Class[_ <: Throwable],
+      crashed: GamesStore => Unit): Unit = {
+    val pages = userPages("alice", game("shared", 150, "1-0")) ++
+      userPages("bob", game("shared", 150, "1-0"))
+    val csv = "alice,bob"
+    def snapshot(store: GamesStore, states: StateStore) = (
+      store.games(spark).collect()
+        .map(r => (r.getAs[String]("game_url"), r.getAs[String]("username"))).toSet,
+      store.ledger(spark).collect()
+        .map(r => (r.getAs[String]("username"), r.getAs[String]("archive_url"),
+                   r.getAs[Int]("game_count"))).toSeq.sorted,
+      states.load())
+    val (cleanJob, cleanStore, cleanStates) = freshEnv(pages)
+    cleanJob.run(csv)
+    val clean = snapshot(cleanStore, cleanStates)
+    assert(clean._1.size == 7 && clean._2.size == 4 && clean._3.size == 2)
+
+    val (job, store, states, dir) = freshEnvAt(pages)
+    val blocker = obstacle(store, dir)
+    val crash = intercept[Exception](job.run(csv))
+    assert(Iterator.iterate[Throwable](crash)(_.getCause).takeWhile(_ != null)
+      .exists(cause.isInstance), s"crashed with $crash, expected a ${cause.getName}")
+    crashed(store)
+    assert(states.load().isEmpty, "the crashed run saved no state")
+    Files.delete(blocker)
+    job.run(csv)
+    assert(snapshot(store, states) == clean)
+  }
+
+  test("K5 replay: a crash at the state save, after data and ledger, replays to a clean run") {
+    assertReplayEqualsCleanRun(
+      // the atomic save writes state.json.tmp first: a directory there fails it
+      (_, dir) => Files.createDirectories(Paths.get(s"$dir/state.json.tmp")),
+      classOf[java.nio.file.FileSystemException],
+      store => {
+        assert(store.games(spark).count() > 0, "games were written before the crash")
+        assert(store.ledger(spark).count() > 0, "ledger rows were written before the crash")
+      })
+  }
+
+  test("K5 replay: a crash at the ledger append, after the games append, replays to a clean run") {
+    assertReplayEqualsCleanRun(
+      // the ledger's output committer cannot make its _temporary dir under a
+      // regular file of that name; reads ignore `_`-prefixed files
+      (store, _) => {
+        store.ensureAll(spark)
+        Files.createFile(Paths.get(store.ledgerPath, "_temporary"))
+      },
+      classOf[org.apache.hadoop.fs.ParentNotDirectoryException],
+      store => {
+        assert(store.games(spark).count() > 0, "games were written before the crash")
+        assert(store.ledger(spark).count() == 0, "the ledger append is what failed")
+      })
   }
 }
