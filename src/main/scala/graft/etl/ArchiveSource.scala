@@ -7,11 +7,14 @@ import org.apache.spark.sql.types.StructType
 /** Readers for the chess.com-shaped sources (SURVEY.md §2.1 S2/S3).
   *
   * Archive listing is one tiny request per user → driver-side. Archive
-  * payload fetching is the fan-out path: it runs INSIDE executors over a
-  * Dataset of URLs (`mapPartitions`-shaped via the DataFrame API), so a
-  * backfill of thousands of archives parallelizes across the cluster
-  * instead of serializing on the driver the way the reference does
-  * (`fetch_and_post.py:331-344`).
+  * payload fetching is the fan-out path: [[readArchives]] runs it INSIDE
+  * executors, one task per archive (up to 64 tasks), so a backfill of
+  * thousands of archives parallelizes across the cluster instead of
+  * serializing on the driver the way the reference does
+  * (`fetch_and_post.py:331-344`). It is the only distributed fetch: it
+  * takes the caller's [[Fetcher]] instance, which a DataSourceV2
+  * connector, building its reader from string options on executors,
+  * could not.
   */
 object ArchiveSource {
 
@@ -40,17 +43,19 @@ object ArchiveSource {
     * Output columns: `username`, `archive_url`, `game` (Schemas.gameType),
     * plus `fetch_status` rows for failed archives (game = null) so the
     * caller can ledger/status-log failures without a second pass.
+    *
+    * Every task fetches through its own deserialized copy of `fetcher`;
+    * a [[RateLimitedFetcher]] inside it still paces all of them, through
+    * one gate per executor JVM.
     */
   def readArchives(spark: SparkSession, fetcher: Fetcher,
                    archives: Seq[(String, String)]): DataFrame = {
     import spark.implicits._
+    // contiguous slices, one archive per task up to 64 tasks: the list
+    // lives on the driver, so slicing it costs no shuffle
+    val slices = math.max(1, math.min(archives.size, 64))
     val fetched = spark
-      .createDataset(archives)
-      .toDF("username", "archive_url")
-      // repartition so each archive fetch is its own task unit (rate
-      // limiting happens inside the fetcher; parallelism across archives)
-      .repartition(math.max(1, math.min(archives.size, 64)), col("archive_url"))
-      .as[(String, String)]
+      .createDataset(spark.sparkContext.parallelize(archives, slices))
       .map { case (user, url) =>
         fetcher.fetch(url) match {
           case Right(body)  => (user, url, body, 200)

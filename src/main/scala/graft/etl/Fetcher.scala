@@ -7,7 +7,8 @@ package graft.etl
   * {429,500,502,503,504}, exponential backoff ×2. Here the fetcher is a
   * serializable trait so the SAME retry wrapper runs either driver-side
   * (archive listing — one tiny call per user) or inside executors via
-  * `mapPartitions` (archive payloads — the fan-out path that must scale).
+  * `ArchiveSource.readArchives` (archive payloads — the fan-out path that
+  * must scale).
   */
 trait Fetcher extends Serializable {
   /** Fetch a URL. Left(status) on a failed HTTP status, Right(body) on 200. */
@@ -54,12 +55,12 @@ final case class RetryingFetcher(
 
 /** Inter-request pacing (S1: the reference sleeps `CHESS_REQUEST_DELAY`
   * between requests, `fetch_and_post.py:34,336,415`): enforces a minimum
-  * gap between consecutive fetches THROUGH THIS INSTANCE (`fetch` is
-  * synchronized, so a shared instance paces all threads using it). The
-  * effective global request rate is instances / delaySeconds — e.g. one
-  * shared instance per executor (see `ChessArchiveSource.sharedFetcherFor`)
-  * gives ≈ executors/delay req/s; size the delay so that stays within the
-  * API's budget.
+  * gap between consecutive fetches through this limiter, across threads
+  * and tasks. Spark hands each task its own deserialized copy, so the last
+  * fetch time lives in a JVM-wide gate named by an id every copy carries:
+  * all copies of one limiter in a JVM queue on the same gate. The
+  * effective global request rate is therefore ≈ executors / delaySeconds;
+  * size the delay so that stays within the API's budget.
   */
 final case class RateLimitedFetcher(
     inner: Fetcher,
@@ -67,16 +68,30 @@ final case class RateLimitedFetcher(
     sleeper: Long => Unit = Thread.sleep,
     clock: () => Long = System.currentTimeMillis) extends Fetcher {
 
-  @transient private var lastAt = Long.MinValue
+  private val gateId = java.util.UUID.randomUUID()
 
-  override def fetch(url: String): Either[Int, String] = synchronized {
-    val now = clock()
-    if (lastAt != Long.MinValue && now - lastAt < minDelayMs)
-      sleeper(minDelayMs - (now - lastAt))
-    val r = inner.fetch(url)
-    lastAt = clock()
-    r
+  override def fetch(url: String): Either[Int, String] = {
+    val gate = RateLimitedFetcher.gate(gateId)
+    gate.synchronized {
+      val now = clock()
+      if (gate.lastAt != Long.MinValue && now - gate.lastAt < minDelayMs)
+        sleeper(minDelayMs - (now - gate.lastAt))
+      val r = inner.fetch(url)
+      gate.lastAt = clock()
+      r
+    }
   }
+}
+
+object RateLimitedFetcher {
+
+  /** The last fetch end of one limiter in this JVM. */
+  private final class Gate { var lastAt = Long.MinValue }
+
+  /** One small entry per limiter this JVM has fetched through. */
+  private val gates = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Gate]()
+
+  private def gate(id: java.util.UUID): Gate = gates.computeIfAbsent(id, _ => new Gate)
 }
 
 /** Real HTTP fetcher over `java.net.http` (JDK built-in, no extra deps).

@@ -31,10 +31,6 @@ object Schemas {
   val archiveType: StructType =
     StructType(Seq(StructField("games", ArrayType(gameType))))
 
-  /** Archive-list response: `{"archives": ["url", ...]}`. */
-  val archiveListType: StructType =
-    StructType(Seq(StructField("archives", ArrayType(StringType))))
-
   /** The 13-column games fact table (FIXTURES.md §3). */
   val gamesFact: StructType = StructType(Seq(
     StructField("ingest_time", TimestampType),

@@ -52,9 +52,9 @@ object GraphOps {
     * SparkPlan's default), so `LogicalRDD.fromDataset` would forget
     * the layout this exchange just paid for and every later join
     * would re-shuffle the frame anyway. The statement's plan is a
-    * fixed repartition + sort — AQE has nothing to adapt — and the
-    * toggle is restored before anything else plans; the iterative
-    * consumers run their per-round plans under AQE unchanged.
+    * fixed repartition + sort — AQE has nothing to adapt — and AQE is
+    * turned off only on a cloned session, never on the caller's; the
+    * iterative consumers run their per-round plans under AQE unchanged.
     *
     * Skew caveat: a hot `key` concentrates in one partition exactly
     * as it did in the per-round exchanges this replaces — no new skew

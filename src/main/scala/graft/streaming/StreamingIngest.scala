@@ -17,7 +17,7 @@ import graft.etl.{ArchiveSource, GameTransforms, GamesStore}
   * | daily cron trigger               | `Trigger.AvailableNow` per run    |
   * | `state.json` watermark/ledger    | streaming checkpoint dir          |
   * | re-fetch current month           | file source picks up new files    |
-  * | dedup by game_url on append      | `dropDuplicates` + anti-join sink |
+  * | dedup by game_url on append      | anti-join in the sink             |
   * | append may fail → retried run    | `foreachBatch` replays batch id   |
   *
   * At-least-once file delivery + the idempotent anti-join append =
@@ -41,31 +41,18 @@ object StreamingIngest {
   /** Full streaming pipeline: landing files → projected 13-col fact rows →
     * idempotent batch append into the store.
     *
-    * Dedup lives ENTIRELY in the sink's anti-join (exact, unbounded-safe):
-    * a watermarked `dropDuplicates` here would be wrong twice over — a
-    * backfilled months-old archive would arrive below the watermark and be
-    * dropped as "late" (silent data loss; the reference happily ingests
-    * old months), and without the event-time column in the dedup key the
-    * state store would never evict, growing O(all history). Optional
-    * `streamDedup` enables `dropDuplicatesWithinWatermark(game_url)` as a
-    * state-bounded optimization for deployments where duplicates only
-    * arrive close together in time — the sink anti-join still backstops
-    * exactness either way.
+    * Dedup lives ENTIRELY in the sink's anti-join (exact, unbounded-safe).
+    * A watermarked `dropDuplicates` on the stream would drop a backfilled
+    * months-old archive's games as "late", since they arrive below the
+    * watermark: silent data loss, where the reference ingests old months.
     */
   def ingestStream(spark: SparkSession, landingDir: String, store: GamesStore,
-                   username: String, checkpointDir: String,
-                   watermarkDelay: String = "30 days",
-                   streamDedup: Boolean = false): DataStreamWriter[Row] = {
-    val projected = GameTransforms.projectFact(
+                   username: String, checkpointDir: String): DataStreamWriter[Row] =
+    GameTransforms.projectFact(
       readLandingStream(spark, landingDir)
         .filter(col("game").isNotNull)
         .withColumn("username", lit(username)))
-    val fact =
-      if (streamDedup)
-        projected.withWatermark("end_time_utc", watermarkDelay)
-          .dropDuplicatesWithinWatermark("game_url")
-      else projected
-    fact.writeStream
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -75,7 +62,6 @@ object StreamingIngest {
         store.appendGames(batch.sparkSession, batch)
         (): Unit
       }
-  }
 
   /** Run one incremental pass over whatever has landed (the streaming
     * analog of the reference's daily cron run) and block until done.

@@ -124,10 +124,11 @@ object GraftColumns {
     * SparkPlan's default — so the layout this exchange pays for would
     * be forgotten and every later join/aggregate/window keyed the same
     * way would re-shuffle). The statement's plan is a fixed
-    * repartition + sort — AQE has nothing to adapt — and the toggle is
-    * restored before anything else plans; consumers keep running under
-    * AQE unchanged. This is the iterative-loop shuffle lever: pay the
-    * keyed exchange ONCE, let every round's keyed operation reuse it.
+    * repartition + sort — AQE has nothing to adapt — and AQE is turned
+    * off only on a cloned session, never on the caller's; consumers keep
+    * running under AQE unchanged. This is the iterative-loop shuffle
+    * lever: pay the keyed exchange ONCE, let every round's keyed
+    * operation reuse it.
     */
   def keyedCheckpoint[T](ds: Dataset[T], numParts: Int,
                          partCols: Seq[Column],

@@ -3,7 +3,7 @@ package graft.etl
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, spark_partition_id}
 
 import graft.SparkSpec
 
@@ -371,5 +371,51 @@ class IngestJobSpec extends SparkSpec {
         assert(store.games(spark).count() > 0, "games were written before the crash")
         assert(store.ledger(spark).count() == 0, "the ledger append is what failed")
       })
+  }
+
+  /** Two users' two monthly archives each, as (user, archive) pairs. */
+  private val twoUsersPages = userPages("alice") ++ userPages("bob")
+  private val twoUsersArchives =
+    for (u <- Seq("alice", "bob"); m <- Seq("07", "08")) yield u -> archive(u, m)
+
+  test("readArchives fetches one archive per task, with no shuffle") {
+    val raw = ArchiveSource.readArchives(spark, MapFetcher(twoUsersPages),
+      twoUsersArchives :+ ("bob" -> archive("bob", "09"))) // a 404 is a task too
+    assert(!raw.queryExecution.executedPlan.toString.contains("Exchange"),
+      raw.queryExecution.executedPlan.toString)
+    val partOf = raw.select(col("archive_url"), spark_partition_id())
+      .collect().groupBy(_.getString(0)).map { case (url, rows) => url -> rows.map(_.getInt(1)).toSet }
+    assert(partOf.size == 5 && partOf.values.forall(_.size == 1),
+      s"every archive is fetched by exactly one task: $partOf")
+    assert(partOf.values.flatten.toSet == (0 until 5).toSet, s"one archive per partition: $partOf")
+
+    val many = (1 to 70).map(i => "alice" -> s"$base/missing/$i")
+    assert(ArchiveSource.readArchives(spark, MapFetcher(Map.empty), many).rdd.getNumPartitions == 64,
+      "tasks are capped at 64")
+  }
+
+  test("readArchives paces every task through one RateLimitedFetcher") {
+    IngestJobSpec.fetchStarts.clear()
+    val fetcher = RateLimitedFetcher(StartRecordingFetcher(MapFetcher(twoUsersPages)), minDelayMs = 300)
+    ArchiveSource.readArchives(spark, fetcher, twoUsersArchives).collect()
+    val starts = IngestJobSpec.fetchStarts.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted
+    assert(starts.length == 4)
+    val gapsMs = starts.sliding(2).map { case Array(a, b) => (b - a) / 1e6 }.toSeq
+    // the limiter's clock counts whole milliseconds
+    assert(gapsMs.forall(_ >= 298), s"fetch-start gaps below 300 ms: $gapsMs")
+  }
+}
+
+object IngestJobSpec {
+
+  /** `System.nanoTime` at each [[StartRecordingFetcher]] fetch, in this JVM. */
+  val fetchStarts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+}
+
+/** Records when each fetch starts, from whichever task's copy it runs in. */
+final case class StartRecordingFetcher(inner: Fetcher) extends Fetcher {
+  override def fetch(url: String): Either[Int, String] = {
+    IngestJobSpec.fetchStarts.add(System.nanoTime())
+    inner.fetch(url)
   }
 }
