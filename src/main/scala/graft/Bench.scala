@@ -2,7 +2,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 object Bench {
 
@@ -66,10 +65,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.envCores(4)
-    // Optional comma-separated exact-name filter (dev: reproduce one
+    // Optional comma-separated name-prefix filter (dev: reproduce one
     // query's per-sweep metrics without paying the full suite).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     // Sampled BEFORE any Spark work: from here on the bench's own tasks
     // dominate the 1-minute loadavg, so only this pre-session sample can
     // witness EXTERNAL load. The r10 driver run started at loadavg 9.78
@@ -80,22 +78,9 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     val metrics = new MetricsListener
     spark.sparkContext.addSparkListener(metrics)
-    // SUITE ORDER, defined: ascending numeric query id (q1 … qN), name
-    // tiebreak. SparkEntry.queries is a plain immutable Map, so its
-    // iteration order is HASH order — the r11 ADVICE fix that "iterated
-    // names" still read names out of that unordered map, so committed
-    // artifacts stayed diff-noisy (r12 verdict #4). Sorting by id gives
-    // one canonical order for BOTH execution and JSON emission.
-    val qid = "q(\\d+)".r
-    def idOf(name: String): Int =
-      qid.findPrefixMatchOf(name).map(_.group(1).toInt).getOrElse(Int.MaxValue)
-    val queries: Seq[(String, (SparkSession, String) => DataFrame)] = {
-      val all = SparkEntry.queries.toSeq.sortBy { case (n, _) => (idOf(n), n) }
-      only match {
-        case Some(keep) => all.filter(kv => keep(kv._1))
-        case None       => all
-      }
-    }
+    // SUITE ORDER (SparkEntry.select): one canonical order for BOTH
+    // execution and JSON emission, so committed artifacts diff cleanly.
+    val queries = SparkEntry.select(only.getOrElse(Nil))
     // Drop any RDD blocks a query's operators left pinned (local
     // checkpoints of iterative plans). Operators release their own
     // intermediates, but each query's RESULT checkpoint stays addressable
@@ -211,8 +196,8 @@ object Bench {
     }
     val okResults = results.filterNot(r => failures.contains(r._1))
     val okNames = okResults.map(_._1)
-    val failedJson = names.filter(failures.contains)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failed = names.filter(failures.contains).map(n => n -> failures(n))
+    val failedJson = failed.map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val qs = okResults.map { case (k, r) => s"\"" + k + "\":" + r.minSec }
       .mkString("{", ",", "}")
     // CALIBRATED wall: each sweep's raw seconds × that sweep's host
@@ -255,7 +240,7 @@ object Bench {
     // detail landed in a file named r13 and a future reader would diff
     // the wrong pair — the stamp makes the artifact self-describing
     // regardless of the file it ends up in).
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"queries":$qs,"calibrated_total_sec":$calTotal,"calibrated_queries":$calQs,$calLine,"query_metrics":$qm,"failed":$failedJson,"sf":"$sfDir","cpus":$cpus,$loadLine,"delta_vs_prev":${deltaVsPrev(headBytes, calQ, sfDir, cpus)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","round":$currentRound,"queries":$qs,"calibrated_total_sec":$calTotal,"calibrated_queries":$calQs,$calLine,"query_metrics":$qm,"failed":$failedJson,"sf":"$sfDir","cpus":$cpus,$loadLine,"delta_vs_prev":${deltaVsPrev(headBytes, calQ, failed, sfDir, cpus)}}"""
     println(line)
     // The driver's tail capture truncates stdout at 2000 chars (r06 lost
     // every per-query timing that way) — persist the full JSON as a
@@ -335,6 +320,41 @@ object Bench {
       if (rounds.isEmpty) 0 else rounds.max + 1
     }
 
+  /** The prior artifact's calibrated per-query map. Pulled by regex
+    * like the byte fields (self-generated fixed-shape JSON, no JSON
+    * dependency in the library); extracted + spec-pinned because this
+    * gate first FIRES a round after it ships — a parse bug here would
+    * silently never flag (`BenchDeltaSpec`).
+    */
+  private[graft] def parseCalibratedQueries(text: String): Map[String, Double] =
+    "\"calibrated_queries\":\\{([^}]*)\\}".r.findFirstMatchIn(text)
+      .map { m =>
+        "\"(q[^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(m.group(1))
+          .map(p => p.group(1) -> p.group(2).toDouble).toMap
+      }.getOrElse(Map.empty)
+
+  /** Calibrated-wall regression predicate: >50% AND >0.3 s absolute —
+    * deliberately loose (calibrated wall keeps scheduler jitter; the
+    * byte gate stays the precise plan witness).
+    */
+  private[graft] def wallRegressed(prevSec: Double, nowSec: Double): Boolean =
+    nowSec > prevSec * 1.5 && nowSec - prevSec > 0.3
+
+  /** The `failures` (query, exception class) whose query the previous
+    * artifact timed (its raw `queries` map): both comparisons cover timed
+    * queries only, so without this a query that starts throwing drops
+    * out of `delta_vs_prev` without a trace.
+    */
+  private[graft] def failedSincePrev(prevText: String,
+                                     failures: Seq[(String, String)])
+      : Seq[(String, String)] = {
+    val prevTimed = "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(prevText)
+      .map(m => "\"(q[^\"]+)\":".r.findAllMatchIn(m.group(1))
+        .map(_.group(1)).toSet)
+      .getOrElse(Set.empty[String])
+    failures.filter { case (name, _) => prevTimed(name) }
+  }
+
   /** Per-query shuffle-byte growth vs the previous round's committed
     * BENCH_LOCAL artifact: flags any query whose (write + read) shuffle
     * bytes grew > 20% — a plan regression signal wall-clock noise can't
@@ -359,29 +379,12 @@ object Bench {
     * different sf or cpus the comparison is skipped with an explicit
     * note rather than emitting noise. Artifacts before r8 did not record
     * cpus — an absent field is treated as a mismatch (unknown ≠ equal).
+    * The `failed` map ([[failedSincePrev]]) is filled whatever the sf or
+    * cpus: a query that ran there and throws here is news.
     */
-  /** The prior artifact's calibrated per-query map. Pulled by regex
-    * like the byte fields (self-generated fixed-shape JSON, no JSON
-    * dependency in the library); extracted + spec-pinned because this
-    * gate first FIRES a round after it ships — a parse bug here would
-    * silently never flag (`BenchDeltaSpec`).
-    */
-  private[graft] def parseCalibratedQueries(text: String): Map[String, Double] =
-    "\"calibrated_queries\":\\{([^}]*)\\}".r.findFirstMatchIn(text)
-      .map { m =>
-        "\"(q[^\"]+)\":([0-9.eE+-]+)".r.findAllMatchIn(m.group(1))
-          .map(p => p.group(1) -> p.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
-
-  /** Calibrated-wall regression predicate: >50% AND >0.3 s absolute —
-    * deliberately loose (calibrated wall keeps scheduler jitter; the
-    * byte gate stays the precise plan witness).
-    */
-  private[graft] def wallRegressed(prevSec: Double, nowSec: Double): Boolean =
-    nowSec > prevSec * 1.5 && nowSec - prevSec > 0.3
-
   private def deltaVsPrev(results: Seq[(String, Snap)],
                           calibrated: Seq[(String, Double)],
+                          failures: Seq[(String, String)],
                           sfDir: String, cpus: Int): String = {
     val prevFile = (1 until currentRound).reverse.iterator
       .map(n => n -> new java.io.File(s"BENCH_LOCAL_r$n.json"))
@@ -395,12 +398,14 @@ object Bench {
     val prevCpus = "\"cpus\":(\\d+)".r.findFirstMatchIn(prevText)
       .map(_.group(1)).getOrElse("")
     val prevRound = prevFile.map(_._1).getOrElse(-1)
-    if (prevFile.isEmpty) {
-      s"""{"prev_round":-1,"flagged":{},"wall_flagged":{}}"""
+    val failed = failedSincePrev(prevText, failures)
+      .map { case (n, c) => s""""$n":"$c"""" }.mkString("{", ",", "}")
+    val compared = if (prevFile.isEmpty) {
+      """"flagged":{},"wall_flagged":{}"""
     } else if (prevSf != sfDir) {
-      s"""{"prev_round":$prevRound,"skipped":"sf_mismatch: prev=$prevSf now=$sfDir","flagged":{},"wall_flagged":{}}"""
+      s""""skipped":"sf_mismatch: prev=$prevSf now=$sfDir","flagged":{},"wall_flagged":{}"""
     } else if (prevCpus != cpus.toString) {
-      s"""{"prev_round":$prevRound,"skipped":"cpus_mismatch: prev=${if (prevCpus.isEmpty) "unrecorded" else prevCpus} now=$cpus","flagged":{},"wall_flagged":{}}"""
+      s""""skipped":"cpus_mismatch: prev=${if (prevCpus.isEmpty) "unrecorded" else prevCpus} now=$cpus","flagged":{},"wall_flagged":{}"""
     } else {
       // Prefer the prev artifact's per-sweep arrays (present since r12)
       // and take their MEDIAN — the headline fields of r13-and-earlier
@@ -444,7 +449,8 @@ object Bench {
       }.toSeq
       // An object keyed by query (not bare pairs in an array — the r7
       // shape produced invalid JSON the first time the list was non-empty).
-      s"""{"prev_round":$prevRound,"flagged":${flagged.mkString("{", ",", "}")},"wall_flagged":${wallFlagged.mkString("{", ",", "}")}}"""
+      s""""flagged":${flagged.mkString("{", ",", "}")},"wall_flagged":${wallFlagged.mkString("{", ",", "}")}"""
     }
+    s"""{"prev_round":$prevRound,$compared,"failed":$failed}"""
   }
 }

@@ -22,6 +22,23 @@ object SparkEntry {
       PipelineQueries.queries ++ AdvancedQueries.queries ++
       ChessQueries.queries ++ CurationQueries.queries
 
+  /** The queries named with any of `prefixes` (blank ones ignored; none
+    * = all), in SUITE ORDER: ascending id (q1 … qN), name tiebreak, not
+    * `queries`' hash order. No name is a prefix of another, so a full
+    * name selects exactly its query; `q24_`, not `q24`, skips q240…q249.
+    */
+  def select(prefixes: Seq[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val keep = prefixes.map(_.trim).filter(_.nonEmpty)
+    val id = "q(\\d+)".r
+    queries.toSeq
+      .filter { case (n, _) => keep.isEmpty || keep.exists(n.startsWith) }
+      .sortBy { case (n, _) =>
+        (id.findPrefixMatchOf(n).map(_.group(1).toInt)
+           .getOrElse(Int.MaxValue), n)
+      }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → driver rows-only check.
     */

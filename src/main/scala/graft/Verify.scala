@@ -4,20 +4,17 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)       => (s, o, None)
-      case Array(s, o, pref) => (s, o, Some(pref))
+    // arg 3: comma-separated name PREFIXES (one prefix = the classic
+    // single-query form; a list drives the synth-ladder subset gates).
+    val (sfDir, outDir, prefixes) = args match {
+      case Array(s, o)       => (s, o, Nil)
+      case Array(s, o, pref) => (s, o, pref.split(",").toSeq)
     }
     val spark = GraftSession
       .builder("graft-verify", GraftSession.envCores(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // arg 3: comma-separated name PREFIXES (one prefix = the classic
-    // single-query form; a list drives the synth-ladder subset gates).
-    val prefixes = only.map(_.split(",").map(_.trim).filter(_.nonEmpty))
-    val failures = SparkEntry.queries.toSeq
-      .filter { case (name, _) =>
-        prefixes.forall(_.exists(name.startsWith)) }
+    val failures = SparkEntry.select(prefixes)
       .flatMap { case (name, fn) =>
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")

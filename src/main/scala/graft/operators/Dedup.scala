@@ -1177,25 +1177,6 @@ object Dedup {
       .select(col(idA), col(txtA), col(idB), col(txtB), col("dist"))
   }
 
-  /** The candidate stage of [[passJoinPairs]], public for callers that
-    * audit or re-verify candidates themselves (the
-    * [[minhashCandidatePairs]] convention): one row per DISTINCT
-    * id-ordered pair agreeing on (blockCols, indexed length, segment
-    * index, segment text) — a SUPERSET of the true ≤ maxDist pair set
-    * by the pigeonhole argument, before any `levenshtein` runs.
-    */
-  def passJoinCandidates(records: DataFrame, idCol: String,
-                         textCol: String, blockCols: Seq[String],
-                         maxDist: Int): DataFrame = {
-    val idA = s"${idCol}_a"; val idB = s"${idCol}_b"
-    val (probe, index, keys) =
-      passJoinSides(records, idCol, textCol, blockCols, maxDist)
-    probe.drop("__prb_txt").join(index.drop("__idx_txt"), keys)
-      .filter(col("__prb_id") < col("__idx_id"))
-      .select(col("__prb_id").as(idA), col("__idx_id").as(idB))
-      .distinct()
-  }
-
   /** The two generation sides of the PassJoin signature join: (probe,
     * index, join keys). Probe rows carry (keys…, __prb_id, __prb_txt),
     * index rows (keys…, __idx_id, __idx_txt).

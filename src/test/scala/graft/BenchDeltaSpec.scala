@@ -34,6 +34,19 @@ class BenchDeltaSpec extends AnyFunSuite {
     assert(Bench.parseCalibratedQueries(old) === Map.empty)
   }
 
+  test("failedSincePrev names each failed query the previous artifact " +
+       "timed, with its exception class, and no query it did not time") {
+    val failures = Seq("q1_agg" -> "java.io.FileNotFoundException",
+                       "q3_dim_join" -> "java.lang.IllegalStateException",
+                       "q269_curation_dag" -> "java.lang.RuntimeException")
+    // q269 sits only in the calibrated map: the raw `queries` map is
+    // what the previous run timed
+    assert(Bench.failedSincePrev(artifact, failures) ===
+             Seq("q1_agg" -> "java.io.FileNotFoundException"))
+    assert(Bench.failedSincePrev(artifact, Nil) === Nil)
+    assert(Bench.failedSincePrev("", failures) === Nil)
+  }
+
   test("wallRegressed needs BOTH >50% growth and >0.3 s absolute") {
     assert(Bench.wallRegressed(1.0, 1.6))        // 60% and +0.6 s
     assert(!Bench.wallRegressed(1.0, 1.45))      // only 45%
