@@ -1,66 +1,8 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.obs.{Blocks, Counts, Meter, Released}
 
 object Bench {
-
-  /** Accumulates task-level shuffle/spill bytes plus task and
-    * task-failure counts. Wall-clock noise can hide a plan regression
-    * (an extra exchange costs little at sf0.1 but is the 100 TB
-    * bottleneck); these counters make it a metric diff. The task/failure
-    * counts are the re-execution witness the r11 q269 anomaly lacked:
-    * a retried stage shows MORE TASKS (and usually failures) in the
-    * inflated sweep, an AQE plan switch shows the same task count at
-    * different bytes, and an accounting leak shows bytes without tasks.
-    */
-  private final class MetricsListener extends SparkListener {
-    val shuffleWrite = new AtomicLong
-    val shuffleRead  = new AtomicLong
-    val memSpill     = new AtomicLong
-    val diskSpill    = new AtomicLong
-    val tasks        = new AtomicLong
-    val failedTasks  = new AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      if (te.reason != org.apache.spark.Success) failedTasks.incrementAndGet()
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit = Seq(shuffleWrite, shuffleRead, memSpill, diskSpill,
-                            tasks, failedTasks).foreach(_.set(0L))
-    def snapshot: Snap = Snap(shuffleWrite.get, shuffleRead.get,
-                              memSpill.get, diskSpill.get,
-                              tasks.get, failedTasks.get)
-    /** Listener events are delivered async; settle until stable. Runs
-      * after EVERY query in EVERY sweep now (the r11 verdict's per-sweep
-      * accounting), so the poll is kept short — events in local mode
-      * drain in a few ms once the action returns.
-      */
-    def settled: Snap = {
-      var prev = snapshot
-      var same = 0
-      while (same < 2) {
-        Thread.sleep(20)
-        val cur = snapshot
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-      }
-      prev
-    }
-  }
-
-  private final case class Snap(sw: Long, sr: Long, ms: Long, ds: Long,
-                                tasks: Long, failed: Long) {
-    def -(o: Snap): Snap = Snap(sw - o.sw, sr - o.sr, ms - o.ms,
-                                ds - o.ds, tasks - o.tasks,
-                                failed - o.failed)
-    def shuffleTotal: Long = sw + sr
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -76,19 +18,9 @@ object Bench {
     val loadPre = systemLoadAvg
     val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
     // SUITE ORDER (SparkEntry.select): one canonical order for BOTH
     // execution and JSON emission, so committed artifacts diff cleanly.
     val queries = SparkEntry.select(only.getOrElse(Nil))
-    // Drop any RDD blocks a query's operators left pinned (local
-    // checkpoints of iterative plans). Operators release their own
-    // intermediates, but each query's RESULT checkpoint stays addressable
-    // until driver GC; clearing between queries makes every timed run see
-    // the same (empty) block-manager state.
-    def clearBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     // Untimed warmup: run the FULL suite once. Cold runs pay one-off
     // Janino/JIT compile of each query's generated classes (~11 s for the
     // heaviest dedup plan, ~2.5 s for the chess CaseWhen trees) plus
@@ -100,7 +32,7 @@ object Bench {
     queries.foreach { case (_, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
-    clearBlocks()
+    Blocks.release(spark)
     // MIN-OF-THREE INTERLEAVED timed sweeps: the full suite runs three
     // times end-to-end and each query's time is the min ACROSS sweeps.
     // Interleaving (not three back-to-back runs of one query) is what
@@ -113,16 +45,18 @@ object Bench {
     // loadavg at each sample start is recorded so the reader can see
     // WHICH samples were loaded.
     //
-    // Shuffle/spill bytes and task counts are now metered PER SWEEP
+    // Shuffle/spill bytes, jobs and task counts are metered PER SWEEP
     // (r11 verdict #1): the old one-snapshot-on-the-last-sweep shape
     // could not distinguish a re-executed stage from an accounting leak
     // when the driver's r11 artifact showed q269 at exactly 2× the
     // same-code builder run. The HEADLINE byte fields are taken from
-    // the sweep with the LOWEST total shuffle bytes — the plan's floor,
-    // the same reasoning as min-of-sweeps wall time — and the full
+    // the sweep with the MEDIAN total shuffle bytes, and the full
     // per-sweep arrays ride next to them so an inflated sweep is
     // attributable (failed tasks → retry; same tasks at 2× bytes → AQE
     // plan switch; bytes with no extra tasks or failures → accounting).
+    // After each query the persisted RDDs it left pinned are released
+    // and recorded (count and cached bytes), so every timed run starts
+    // from the same empty block manager.
     // Sweep count: 3 for the official artifact; the sf1.0 growth
     // harness dials it down (each sweep there is ~10× the work).
     val sweeps = sys.env.get("SPARK_GRAFT_SWEEPS").map(_.toInt).getOrElse(3)
@@ -132,8 +66,10 @@ object Bench {
     val wallT0 = System.nanoTime()
     val times = Array.fill(sweeps)(
       collection.mutable.LinkedHashMap.empty[String, (Double, Double)])
+    // Per sweep and query: what the Meter counted while the query ran,
+    // and the persisted RDDs it left behind for the release after it.
     val sweepMetrics = Array.fill(sweeps)(
-      collection.mutable.LinkedHashMap.empty[String, Snap])
+      collection.mutable.LinkedHashMap.empty[String, (Counts, Released)])
     // Host calibration point BEFORE each sweep (r14 verdict #1): fixed,
     // data-independent CPU + memory kernels whose wall time measures
     // the HOST, not the code — the quantitative anchor that lets a
@@ -146,20 +82,17 @@ object Bench {
     val failures = collection.mutable.Map.empty[String, String]
     for (s <- 0 until sweeps) {
       calPoints(s) = HostCalibration.measure()
-      metrics.reset()
-      var base = Snap(0L, 0L, 0L, 0L, 0L, 0L)
       for ((name, fn) <- queries) {
         val la = systemLoadAvg
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          failures.getOrElseUpdate(name, e.getClass.getName) }
-        val dt = (System.nanoTime() - t0) / 1e9
-        clearBlocks()
-        val snap = metrics.settled
+        val (dt, counts) = Meter.during(spark) {
+          val t0 = System.nanoTime()
+          try fn(spark, sfDir).count()
+          catch { case e: Throwable =>
+            failures.getOrElseUpdate(name, e.getClass.getName) }
+          (System.nanoTime() - t0) / 1e9
+        }
         times(s)(name) = (dt, la)
-        sweepMetrics(s)(name) = snap - base
-        base = snap
+        sweepMetrics(s)(name) = (counts, Blocks.release(spark))
       }
     }
     val wallSec = (System.nanoTime() - wallT0) / 1e9
@@ -174,24 +107,25 @@ object Bench {
     // Per-query rollup in SUITE ORDER (ADVICE r11: a .toMap here emitted
     // the JSON objects in hash order, making committed artifacts
     // diff-noisy whenever the query set changed).
-    final case class QRes(minSec: Double, head: Snap, perSweep: Seq[Snap],
-                          sweepSec: Seq[Double], loads: Seq[Double])
+    final case class QRes(minSec: Double, head: Counts, perSweep: Seq[Counts],
+                          released: Seq[Released], sweepSec: Seq[Double],
+                          loads: Seq[Double])
     val results: Seq[(String, QRes)] = names.map { name =>
       val samples = (0 until sweeps).map(s => times(s)(name))
-      val snaps = (0 until sweeps).map(s => sweepMetrics(s)(name))
+      val (counts, released) =
+        (0 until sweeps).map(s => sweepMetrics(s)(name)).unzip
       // Headline bytes from the MEDIAN-shuffle sweep, not the min
-      // (r13 verdict #3's root cause): listener attribution can
-      // under-credit one sweep (a neighbor's async task events
-      // straggle across the settle window — q237's official r13 run
-      // recorded [63.3, 45.9, 63.3] KB on a plan whose shape is
-      // deterministic), and a min headline turns that single bad
-      // sample into the floor every later round is diffed against.
-      // The median of 3+ sweeps ignores one straggler in either
-      // direction; a REAL plan switch moves every sweep and moves the
-      // median with it. Wall time keeps the min (contention robust —
-      // wall noise is one-sided, byte attribution noise is not).
-      val head = snaps.sortBy(_.shuffleTotal).apply(snaps.size / 2)
-      name -> QRes(samples.map(_._1).min, head, snaps,
+      // (r13 verdict #3): q237's official r13 run recorded [63.3, 45.9,
+      // 63.3] KB on a plan whose shape is deterministic, because a
+      // neighbor's task events straggled across the old sleep-based
+      // settle window. Meter's exact bus drain removes that cause; the
+      // median stays because a min headline would turn any single bad
+      // sample into the floor every later round is diffed against,
+      // while a REAL plan switch moves every sweep and the median with
+      // it. Wall time keeps the min (contention robust — wall noise is
+      // one-sided).
+      val head = counts.sortBy(_.shuffleBytes).apply(counts.size / 2)
+      name -> QRes(samples.map(_._1).min, head, counts, released,
                    samples.map(_._1), samples.map(_._2))
     }
     val okResults = results.filterNot(r => failures.contains(r._1))
@@ -216,15 +150,19 @@ object Bench {
       .mkString("{", ",", "}")
     val calLine =
       f""""calibration":{"ref":{"st_arith_mops":${HostCalibration.RefStArithMops}%.1f,"mt_arith_mops":${HostCalibration.RefMtArithMops}%.1f,"mem_gbps":${HostCalibration.RefMemGBps}%.2f},"sweep_points":${calPoints.map(_.json).mkString("[", ",", "]")},"sweep_factors":${sweepFactors.map(f => f"$f%.4f").mkString("[", ",", "]")},"factor_median":${sweepFactors.sorted.apply(sweeps / 2)}%.4f}"""
+    def arr(xs: Seq[Any]): String = xs.mkString("[", ",", "]")
     val qm = results.map { case (k, r) =>
-      s"\"$k\":{\"shuffle_write_bytes\":${r.head.sw}," +
-        s"\"shuffle_read_bytes\":${r.head.sr}," +
-        s"\"mem_spill_bytes\":${r.head.ms}," +
-        s"\"disk_spill_bytes\":${r.head.ds}," +
-        s"\"sweep_shuffle_bytes\":${r.perSweep.map(_.shuffleTotal).mkString("[", ",", "]")}," +
-        s"\"sweep_spill_bytes\":${r.perSweep.map(x => x.ms + x.ds).mkString("[", ",", "]")}," +
-        s"\"sweep_tasks\":${r.perSweep.map(_.tasks).mkString("[", ",", "]")}," +
-        s"\"sweep_failed_tasks\":${r.perSweep.map(_.failed).mkString("[", ",", "]")}," +
+      s"\"$k\":{\"shuffle_write_bytes\":${r.head.shuffleWriteBytes}," +
+        s"\"shuffle_read_bytes\":${r.head.shuffleReadBytes}," +
+        s"\"mem_spill_bytes\":${r.head.memorySpillBytes}," +
+        s"\"disk_spill_bytes\":${r.head.diskSpillBytes}," +
+        s"\"sweep_shuffle_bytes\":${arr(r.perSweep.map(_.shuffleBytes))}," +
+        s"\"sweep_spill_bytes\":${arr(r.perSweep.map(_.spillBytes))}," +
+        s"\"sweep_tasks\":${arr(r.perSweep.map(_.tasks))}," +
+        s"\"sweep_failed_tasks\":${arr(r.perSweep.map(_.failedTasks))}," +
+        s"\"sweep_jobs\":${arr(r.perSweep.map(_.jobs))}," +
+        s"\"sweep_persisted_rdds\":${arr(r.released.map(_.rdds))}," +
+        s"\"sweep_persisted_bytes\":${arr(r.released.map(_.bytes))}," +
         s"\"sweep_sec\":${r.sweepSec.mkString("[", ",", "]")}," +
         "\"loadavg_starts\":" +
         r.loads.map(l => f"$l%.2f").mkString("[", ",", "]") +
@@ -257,13 +195,8 @@ object Bench {
     // this round's committed floor). The first official run of a round
     // owns BENCH_LOCAL_r<N>.json; any later official rerun in the same
     // round lands in `_refresh<k>`. SPARK_GRAFT_BENCH_TAG names a dev
-    // experiment explicitly (e.g. `clusterprofile`) and never collides.
-    // A profiled run (SPARK_GRAFT_PROFILE) is an experiment by
-    // definition — default its tag to the profile name so it can never
-    // claim the official round artifact even at default sweeps.
-    val tag = sys.env.get("SPARK_GRAFT_BENCH_TAG")
-      .orElse(sys.env.get("SPARK_GRAFT_PROFILE").map(p => s"${p}profile"))
-      .map("_" + _).getOrElse("")
+    // experiment explicitly and never collides.
+    val tag = sys.env.get("SPARK_GRAFT_BENCH_TAG").map("_" + _).getOrElse("")
     val artifact = {
       val base =
         s"BENCH_LOCAL_r$currentRound$tag${if (official) "" else "_partial"}"
@@ -382,7 +315,7 @@ object Bench {
     * The `failed` map ([[failedSincePrev]]) is filled whatever the sf or
     * cpus: a query that ran there and throws here is news.
     */
-  private def deltaVsPrev(results: Seq[(String, Snap)],
+  private def deltaVsPrev(results: Seq[(String, Counts)],
                           calibrated: Seq[(String, Double)],
                           failures: Seq[(String, String)],
                           sfDir: String, cpus: Int): String = {
@@ -428,10 +361,10 @@ object Bench {
         .toMap
       val prev = prevHead ++ prevSweeps
       val flagged = results.iterator.collect {
-        case (name, snap) if prev.contains(name) &&
-            snap.shuffleTotal > prev(name) * 12L / 10L &&
-            snap.shuffleTotal - prev(name) > 4096L =>
-          s"""\"$name\":{\"prev_shuffle_bytes\":${prev(name)},\"now_shuffle_bytes\":${snap.shuffleTotal}}"""
+        case (name, c) if prev.contains(name) &&
+            c.shuffleBytes > prev(name) * 12L / 10L &&
+            c.shuffleBytes - prev(name) > 4096L =>
+          s"""\"$name\":{\"prev_shuffle_bytes\":${prev(name)},\"now_shuffle_bytes\":${c.shuffleBytes}}"""
       }.toSeq
       // CALIBRATED-WALL compare (r14 verdict #1): both sides are
       // host-normalized seconds, so this gate flags real per-query

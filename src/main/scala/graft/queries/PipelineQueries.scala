@@ -1422,70 +1422,80 @@ object PipelineQueries {
     // §2.6: actions are only sequential because the driver calls them
     // sequentially; the truth job's tail back-fills cores the driver-
     // loop trainers leave idle). Determinism is untouched — the same
-    // jobs run, just overlapped.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
+    // jobs run, just overlapped. The truth runs on its own one-thread
+    // daemon executor and is awaited in `finally`, so a trainer that
+    // throws never leaves it running past the query.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val truthPool = java.util.concurrent.Executors.newSingleThreadExecutor {
+      r => val t = new Thread(r, "q251-truth"); t.setDaemon(true); t
+    }
     val exactF = Future {
       Similarity.bruteForceTopK(emb, queries, 3)
         .select("qid", "neighbor_id").graftCheckpoint()
+    }(ExecutionContext.fromExecutor(truthPool))
+    def exact = Await.result(exactF, Duration.Inf)
+    val rows = try {
+      lazy val nExact = exact.agg(count(lit(1)).as("n_exact"))
+      val nQ = queries.agg(count(lit(1)).as("n_queries"))
+      def countCand(df: DataFrame): DataFrame =
+        df.agg(count(lit(1)).cast("long").as("n_candidates"))
+      def row(name: String, result: DataFrame, cand: DataFrame): DataFrame =
+        nExact
+          .crossJoin(exact.join(result, Seq("qid", "neighbor_id"),
+                                "left_semi")
+            .agg(count(lit(1)).as("n_overlap")))
+          .crossJoin(cand).crossJoin(nQ)
+          .select(lit(name).as("index_name"), col("n_queries"),
+                  col("n_candidates"), col("n_exact"), col("n_overlap"))
+      // TRAIN ONCE, READ EVERYWHERE (r15 verdict #2): the four index
+      // stacks previously each trained their own models — ivfPqTopK
+      // re-ran the SAME 8-centroid/3-iter coarse k-means and the SAME
+      // 4×16-code joint PQ training that the IVF and PQ rows had just
+      // paid, and ivfTopKWith re-derived the SAME posting-list probe the
+      // checkpointed candidate frame already held. Every trainer is
+      // deterministic integer arithmetic, so sharing the coarse
+      // quantizer (`cdf`), the probed candidates (`ivfCand`), and the PQ
+      // model (codes + ADC tables) across branches is bit-identical to
+      // the per-branch retrains the oracle replays.
+      val cdf = graft.operators.Clustering.dequantize(
+          graft.operators.Clustering.kmeansFit(
+            emb, "vec_id", "embedding", k = 8, dims = 64, iters = 3))
+        .toDF("cid", "cv")
+      val ivfCand = Similarity.ivfCandidates(emb, pred, cdf, nProbe = 2)
+        .graftCheckpoint() // three readers (IVF rerank, IVF-PQ, counts)
+      val (pqCodes, pqAdc, pqScaled) =
+        Similarity.pqCodesAndAdc(emb, pred, m = 4, subDims = 16,
+                                 codeK = 16, iters = 2)
+      // both PQ consumers materialize eagerly (graftCheckpoint inside),
+      // so the model's quantized cache can be released right after
+      val pqOut = Similarity.pqTopKFrom(pqCodes, pqAdc, k = 3, m = 4)
+      val ivfPqOut = Similarity.ivfPqTopKFrom(ivfCand, pqCodes, pqAdc,
+                                              k = 3, m = 4)
+      pqScaled.unpersist()
+      val pqCand = emb.agg(count(lit(1)).as("__n"))
+        .crossJoin(queries.agg(count(lit(1)).as("__nq")))
+        .select((col("__nq") * (col("__n") - 1)).cast("long")
+          .as("n_candidates"))
+      row("lsh_16x4",
+          Similarity.annTopK(emb, pred, k = 3, tables = 16,
+                             planesPerTable = 4)
+            .select(col("qid"), col("neighbor_id")),
+          countCand(Similarity.lshCandidates(emb, pred, 16, 4)))
+        .unionByName(row("ivf_t8_p2",
+          Similarity.ivfTopKFrom(emb, pred, ivfCand, k = 3)
+            .select(col("qid"), col("neighbor_id")),
+          countCand(ivfCand)))
+        .unionByName(row("pq_4x16",
+          pqOut.select(col("qid"), col("vec_id").as("neighbor_id")),
+          pqCand))
+        .unionByName(row("ivfpq_t8_p2_4x16",
+          ivfPqOut.select(col("qid"), col("vec_id").as("neighbor_id")),
+          countCand(ivfCand)))
+    } finally {
+      Await.ready(exactF, Duration.Inf)
+      truthPool.shutdown()
     }
-    def exact = Await.result(exactF, scala.concurrent.duration.Duration.Inf)
-    lazy val nExact = exact.agg(count(lit(1)).as("n_exact"))
-    val nQ = queries.agg(count(lit(1)).as("n_queries"))
-    def countCand(df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).cast("long").as("n_candidates"))
-    def row(name: String, result: DataFrame, cand: DataFrame): DataFrame =
-      nExact
-        .crossJoin(exact.join(result, Seq("qid", "neighbor_id"),
-                              "left_semi")
-          .agg(count(lit(1)).as("n_overlap")))
-        .crossJoin(cand).crossJoin(nQ)
-        .select(lit(name).as("index_name"), col("n_queries"),
-                col("n_candidates"), col("n_exact"), col("n_overlap"))
-    // TRAIN ONCE, READ EVERYWHERE (r15 verdict #2): the four index
-    // stacks previously each trained their own models — ivfPqTopK
-    // re-ran the SAME 8-centroid/3-iter coarse k-means and the SAME
-    // 4×16-code joint PQ training that the IVF and PQ rows had just
-    // paid, and ivfTopKWith re-derived the SAME posting-list probe the
-    // checkpointed candidate frame already held. Every trainer is
-    // deterministic integer arithmetic, so sharing the coarse
-    // quantizer (`cdf`), the probed candidates (`ivfCand`), and the PQ
-    // model (codes + ADC tables) across branches is bit-identical to
-    // the per-branch retrains the oracle replays.
-    val cdf = graft.operators.Clustering.dequantize(
-        graft.operators.Clustering.kmeansFit(
-          emb, "vec_id", "embedding", k = 8, dims = 64, iters = 3))
-      .toDF("cid", "cv")
-    val ivfCand = Similarity.ivfCandidates(emb, pred, cdf, nProbe = 2)
-      .graftCheckpoint() // three readers (IVF rerank, IVF-PQ, counts)
-    val (pqCodes, pqAdc, pqScaled) =
-      Similarity.pqCodesAndAdc(emb, pred, m = 4, subDims = 16,
-                               codeK = 16, iters = 2)
-    // both PQ consumers materialize eagerly (graftCheckpoint inside),
-    // so the model's quantized cache can be released right after
-    val pqOut = Similarity.pqTopKFrom(pqCodes, pqAdc, k = 3, m = 4)
-    val ivfPqOut = Similarity.ivfPqTopKFrom(ivfCand, pqCodes, pqAdc,
-                                            k = 3, m = 4)
-    pqScaled.unpersist()
-    val pqCand = emb.agg(count(lit(1)).as("__n"))
-      .crossJoin(queries.agg(count(lit(1)).as("__nq")))
-      .select((col("__nq") * (col("__n") - 1)).cast("long")
-        .as("n_candidates"))
-    val rows = row("lsh_16x4",
-        Similarity.annTopK(emb, pred, k = 3, tables = 16,
-                           planesPerTable = 4)
-          .select(col("qid"), col("neighbor_id")),
-        countCand(Similarity.lshCandidates(emb, pred, 16, 4)))
-      .unionByName(row("ivf_t8_p2",
-        Similarity.ivfTopKFrom(emb, pred, ivfCand, k = 3)
-          .select(col("qid"), col("neighbor_id")),
-        countCand(ivfCand)))
-      .unionByName(row("pq_4x16",
-        pqOut.select(col("qid"), col("vec_id").as("neighbor_id")),
-        pqCand))
-      .unionByName(row("ivfpq_t8_p2_4x16",
-        ivfPqOut.select(col("qid"), col("vec_id").as("neighbor_id")),
-        countCand(ivfCand)))
     rows.select(col("index_name"), col("n_queries"), col("n_candidates"),
                 col("n_exact"), col("n_overlap"),
                 expr("(1000000 * n_overlap) div n_exact").as("recall_e6"),

@@ -1,15 +1,12 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentHashMap
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftCodegenAudit, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 import graft.{GraftSession, SparkEntry}
+import graft.obs.{Blocks, Meter}
 
 /** The one inspection tool: `runMain graft.tools.Inspect <sfDir>
   * <prefixes> plans <outDir> <tag> | jobs | codegen [outFile]`, over the
@@ -67,12 +64,7 @@ object Inspect {
       catch { case e: Throwable =>
         System.err.println(s"[inspect] $name failed: $e")
         Some(name -> e.getClass.getName)
-      } finally {
-        // drop the blocks a query's operators left pinned (local
-        // checkpoints), so every query starts from the same state
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      } finally Blocks.release(spark)
     }
 
   private def execute(df: DataFrame): Unit = df.queryExecution.toRdd.count()
@@ -104,34 +96,18 @@ object Inspect {
     * job time grouped by job description (e.g. q269's `q269:<stage>`). */
   private def jobs(spark: SparkSession, sfDir: String,
                    prefixes: String): Int = {
-    val starts = new ConcurrentHashMap[Int, (String, Long)]()
-    val totals = new ConcurrentHashMap[String, (Long, Long)]() // ns, jobs
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("<unlabeled>")
-        starts.put(js.jobId, (desc, System.nanoTime()))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        Option(starts.remove(je.jobId)).foreach { case (desc, t0) =>
-          totals.merge(desc, (System.nanoTime() - t0, 1L),
-            (a, b) => (a._1 + b._1, a._2 + b._2))
-        }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try exitCode(inspect(spark, sfDir, prefixes) { (name, build) =>
+    exitCode(inspect(spark, sfDir, prefixes) { (name, build) =>
       execute(build()) // warm-up
-      totals.clear()
-      val t0 = System.nanoTime()
-      execute(build())
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener events are delivered async
-      println(f"JOBPROFILE $name total ${wall}%.2f s")
-      totals.asScala.toSeq.sortBy(-_._2._1).foreach { case (d, (ns, nj)) =>
-        println(f"JOBPROFILE  ${ns / 1e9}%7.2f s  $nj%3d jobs  $d")
+      val (wall, counts) = Meter.during(spark) {
+        val t0 = System.nanoTime()
+        execute(build())
+        (System.nanoTime() - t0) / 1e9
       }
-    }) finally spark.sparkContext.removeSparkListener(listener)
+      println(f"JOBPROFILE $name total ${wall}%.2f s")
+      counts.jobTime.toSeq.sortBy(-_._2.ms).foreach { case (d, t) =>
+        println(f"JOBPROFILE  ${t.ms / 1e3}%7.2f s  ${t.jobs}%3d jobs  $d")
+      }
+    })
   }
 
   /** `codegen`: after each query runs, re-emit + re-compile each fused

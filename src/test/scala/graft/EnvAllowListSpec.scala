@@ -16,8 +16,7 @@ class EnvAllowListSpec extends AnyFunSuite {
 
   private val allowed = Set(
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_ONLY",
-    "SPARK_GRAFT_SWEEPS", "SPARK_GRAFT_BENCH_TAG", "SPARK_GRAFT_PROFILE",
-    "SPARK_GRAFT_ROUND")
+    "SPARK_GRAFT_SWEEPS", "SPARK_GRAFT_BENCH_TAG", "SPARK_GRAFT_ROUND")
 
   private val mainSources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")

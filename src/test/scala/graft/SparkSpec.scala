@@ -14,11 +14,14 @@ trait SparkSpec extends AnyFunSuite {
     * driver-side actions inside (counted broadcast gates, collected
     * offsets, iterative fits): their interesting exchanges/joins never
     * appear in the RESULT's `finalPlan`, only in the intermediate
-    * executions. Listener callbacks are async — polls until the plan
-    * stream is stable for 3 ticks (10 s deadline).
+    * executions. Listener callbacks are async: the listener bus is
+    * drained before the listener is registered (so no earlier action's
+    * plan leaks in) and after `body` (so every plan `body` executed is
+    * in), which makes the capture exact.
     */
   def withCapturedPlans[A](body: => A)(check: List[String] => Unit): A = {
     import scala.collection.mutable
+    import org.apache.spark.GraftBus
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val captured = mutable.Buffer.empty[String]
@@ -29,18 +32,11 @@ trait SparkSpec extends AnyFunSuite {
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
+    GraftBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       val result = body
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      var last = -1
-      var stable = 0
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val n = captured.synchronized(captured.size)
-        if (n == last && n > 0) stable += 1 else stable = 0
-        last = n
-        Thread.sleep(100)
-      }
+      GraftBus.drain(spark.sparkContext)
       val plans = captured.synchronized(captured.toList)
       assert(plans.nonEmpty, "listener captured no executed plans")
       check(plans)

@@ -2,7 +2,6 @@ package graft.etl
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, spark_partition_id}
 
 import graft.SparkSpec
@@ -55,36 +54,9 @@ class IngestJobSpec extends SparkSpec {
       m2 -> Right(s"""{"games":[${game(s"$user-g3", 300, "1/2-1/2")}]}"""))
   }
 
-  /** Spark jobs started while `body` runs. Listener events arrive
-    * asynchronously but in order, so the body's jobs are the ones started
-    * between a marker job run before it and one run after it.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    def marker(name: String): Unit = {
-      sc.setJobDescription(name)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("jobs-before")
-      body
-      marker("jobs-after")
-      val seen = scala.collection.mutable.Buffer.empty[String]
-      while (!seen.contains("jobs-after")) {
-        val d = starts.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-        assert(d != null, "listener never saw the closing marker job")
-        seen += d
-      }
-      seen.dropWhile(_ != "jobs-before").tail.takeWhile(_ != "jobs-after").size
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int =
+    graft.obs.Meter.during(spark)(body)._2.jobs.toInt
 
   private val a1 = s"$base/pub/player/alice/games/2025/07"
   private val a2 = s"$base/pub/player/alice/games/2025/08"

@@ -535,79 +535,42 @@ class PlanShapeSpec extends SparkSpec {
     // the query level; pin the operator's internals directly
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.documents(spark, sf)
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = plans.synchronized {
-        plans += qe.executedPlan.toString
-      }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    withCapturedPlans {
       graft.operators.Dedup.jaccardPairs(docs, "doc_id", "text",
         n = 3, num = 1, den = 2, maxBucketDocs = 2).count()
-      var prev = -1; var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val cur = plans.synchronized(plans.size)
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val all = plans.synchronized(plans.mkString("\n"))
-    assert(all.contains("WindowGroupLimit") || all.contains("Window"),
-      "the per-bucket min-id sample is a rank window over the bucket key")
-    assert(all.contains("InMemoryTableScan"),
-      "verification must read the persisted FULL shingle sets")
-    assert(!all.contains("CartesianProduct"),
-      "no product anywhere in the capped path")
+    } { plans =>
+      val all = plans.mkString("\n")
+      assert(all.contains("WindowGroupLimit") || all.contains("Window"),
+        "the per-bucket min-id sample is a rank window over the bucket key")
+      assert(all.contains("InMemoryTableScan"),
+        "verification must read the persisted FULL shingle sets")
+      assert(!all.contains("CartesianProduct"),
+        "no product anywhere in the capped path")
+    }
   }
 
   test("q152: each LPA round is keyed join + hash aggs — no window, " +
        "no cross product") {
     // localCheckpoint truncates lineage, so the FINAL plan is just a
     // checkpoint scan — capture every executed plan (one per round's
-    // materialization) through a listener and assert across them all
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = plans.synchronized {
-        plans += qe.executedPlan.toString
-      }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    // the q152 INPUT (CDC chunk graph) legitimately windows per doc —
+    // materialization) through a listener and assert across them all.
+    // The q152 INPUT (CDC chunk graph) legitimately windows per doc —
     // scope the capture to the LPA operator itself on plain edges
     import spark.implicits._
     val edges = (0L until 400L).map(i => (i % 80, (i * 13 + 7) % 80))
       .toDF("u", "v")
-    spark.listenerManager.register(listener)
-    try {
+    withCapturedPlans {
       graft.operators.GraphOps.labelPropagation(edges, "u", "v", 3)
         .collect()
-      // listener delivery is async; settle until the captured set stops
-      // growing (same discipline as Bench's metrics listener)
-      var prev = -1
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val cur = plans.synchronized(plans.size)
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val all = plans.synchronized(plans.mkString("\n"))
-    assert(!all.contains("Window"),
-      "the argmax must be a struct-max aggregate, not a window rank")
-    assert(!all.contains("CartesianProduct") &&
-           !all.contains("BroadcastNestedLoopJoin"),
-      "neighbor label lookup must stay keyed")
-    assert(all.contains("HashAggregate"), "count/argmax as hash aggs")
+    } { plans =>
+      val all = plans.mkString("\n")
+      assert(!all.contains("Window"),
+        "the argmax must be a struct-max aggregate, not a window rank")
+      assert(!all.contains("CartesianProduct") &&
+             !all.contains("BroadcastNestedLoopJoin"),
+        "neighbor label lookup must stay keyed")
+      assert(all.contains("HashAggregate"), "count/argmax as hash aggs")
+    }
   }
 
   test("q153: the 1-row-per-group median/MAD sides broadcast — the " +
@@ -661,39 +624,22 @@ class PlanShapeSpec extends SparkSpec {
           org.apache.spark.sql.functions.col("v"),
         org.apache.spark.sql.functions.lit(7L)) + 1L)
     val seeds = Seq(0L, 7L).toDF("node")
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = plans.synchronized {
-        plans += qe.executedPlan.toString
-      }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    withCapturedPlans {
       graft.operators.GraphOps.kCore(edges, "u", "v", k = 2).collect()
       graft.operators.GraphOps.bfsHops(edges, "u", "v", seeds, "node",
         maxHops = 4).collect()
       graft.operators.GraphOps.weightedDistances(weighted, "u", "v", "w",
         seeds, "node", rounds = 4).collect()
-      var prev = -1; var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val cur = plans.synchronized(plans.size)
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val all = plans.synchronized(plans.mkString("\n"))
-    assert(!all.contains("Window"),
-      "per-round relaxation must be joins + aggs, never a window sort")
-    assert(!all.contains("CartesianProduct") &&
-           !all.contains("BroadcastNestedLoopJoin"),
-      "frontier/degree lookups must stay keyed")
-    assert(all.contains("HashAggregate"),
-      "min-dist / degree aggregates must be hash aggs")
+    } { plans =>
+      val all = plans.mkString("\n")
+      assert(!all.contains("Window"),
+        "per-round relaxation must be joins + aggs, never a window sort")
+      assert(!all.contains("CartesianProduct") &&
+             !all.contains("BroadcastNestedLoopJoin"),
+        "frontier/degree lookups must stay keyed")
+      assert(all.contains("HashAggregate"),
+        "min-dist / degree aggregates must be hash aggs")
+    }
   }
 
   test("q200: scene detection is one narrow map — no join, at most " +
@@ -727,35 +673,18 @@ class PlanShapeSpec extends SparkSpec {
     import spark.implicits._
     val edges = (0L until 200L).map(i => (s"n${i % 40}", s"n${(i * 13 + 5) % 40}"))
       .toDF("u", "v")
-    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = plans.synchronized {
-        plans += qe.executedPlan.toString
-      }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    withCapturedPlans {
       graft.operators.GraphOps.pathCounts(edges, "u", "v", seed = "n0",
         maxHops = 4).collect()
-      var prev = -1; var same = 0
-      while (same < 3) {
-        Thread.sleep(100)
-        val cur = plans.synchronized(plans.size)
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    val all = plans.synchronized(plans.mkString("\n"))
-    assert(!all.contains("Window"),
-      "sigma propagation is joins + aggs, never a window sort")
-    assert(!all.contains("CartesianProduct"),
-      "frontier extension and settled exclusion must stay keyed")
-    assert(all.contains("HashAggregate"),
-      "the predecessor-sigma sum must be a hash agg")
+    } { plans =>
+      val all = plans.mkString("\n")
+      assert(!all.contains("Window"),
+        "sigma propagation is joins + aggs, never a window sort")
+      assert(!all.contains("CartesianProduct"),
+        "frontier extension and settled exclusion must stay keyed")
+      assert(all.contains("HashAggregate"),
+        "the predecessor-sigma sum must be a hash agg")
+    }
   }
 
   test("q204: calibration candidates come from the keyed band join — " +
@@ -828,31 +757,9 @@ class PlanShapeSpec extends SparkSpec {
     // This test pins that explanation: totals equal AND both final plans
     // broadcast their candidate joins. If a future change makes either
     // candidate stage shuffle, the equality breaks loudly here first.
-    import java.util.concurrent.atomic.AtomicLong
-    val bytes = new AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) bytes.addAndGet(
-          m.shuffleWriteMetrics.bytesWritten +
-            m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def measure(name: String): Long = {
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        bytes.set(0L)
-        PipelineQueries.queries(name)(spark, sf).count()
-        var prev = -1L; var same = 0
-        while (same < 3) {
-          Thread.sleep(100)
-          val cur = bytes.get
-          if (cur == prev) same += 1 else { same = 0; prev = cur }
-        }
-        bytes.get
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def measure(name: String): Long = graft.obs.Meter.during(spark) {
+      PipelineQueries.queries(name)(spark, sf).count()
+    }._2.shuffleBytes
     val b107 = measure("q107_ppjoin_jaccard")
     val b160 = measure("q160_containment")
     assert(b107 === b160,

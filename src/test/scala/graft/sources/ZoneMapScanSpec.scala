@@ -1,9 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Contracts of [[ZoneMapScan]] — the pruned reader path must (a) be
@@ -20,27 +17,8 @@ class ZoneMapScanSpec extends SparkSpec {
     System.getProperty("java.io.tmpdir") + s"/graft_zmspec_$name"
 
   /** Total task-level bytes read while running `body`. */
-  private def bytesRead(body: => Unit): Long = {
-    val acc = new AtomicLong
-    val l = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) acc.addAndGet(m.inputMetrics.bytesRead); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener bus is async — settle until stable
-      var prev = -1L; var same = 0
-      while (same < 3) {
-        Thread.sleep(50)
-        val cur = acc.get
-        if (cur == prev) same += 1 else { same = 0; prev = cur }
-      }
-      acc.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def bytesRead(body: => Unit): Long =
+    graft.obs.Meter.during(spark)(body)._2.inputBytes
 
   private val rows = (1L to 4000L).map(i => (i, i % 97, s"payload_$i"))
 
