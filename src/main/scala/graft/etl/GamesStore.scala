@@ -57,18 +57,24 @@ final class GamesStore(root: String) extends Serializable {
 
   // --------------------------------------------------------------- reads
 
-  def games(spark: SparkSession): DataFrame = spark.read.parquet(gamesPath)
+  /** Each table is read with its pinned schema ([[Schemas]]): a
+    * schema-less parquet read runs a Spark job to infer it from a footer.
+    * The K4 drift check ([[ensure]]) still reads the footer.
+    */
+  def games(spark: SparkSession): DataFrame =
+    spark.read.schema(Schemas.gamesFact).parquet(gamesPath)
 
-  /** Typed view of the fact (same scan; encoder-checked against
-    * [[Schemas.gamesFact]] — a drifted table fails here at analysis time
-    * instead of at first field access).
+  /** Typed view of the fact (same scan; [[GameRow]]'s encoder is
+    * checked against [[Schemas.gamesFact]] at analysis time).
     */
   def gamesTyped(spark: SparkSession): org.apache.spark.sql.Dataset[GameRow] = {
     import spark.implicits._
     games(spark).as[GameRow]
   }
-  def ledger(spark: SparkSession): DataFrame = spark.read.parquet(ledgerPath)
-  def status(spark: SparkSession): DataFrame = spark.read.parquet(statusPath)
+  def ledger(spark: SparkSession): DataFrame =
+    spark.read.schema(Schemas.ledger).parquet(ledgerPath)
+  def status(spark: SparkSession): DataFrame =
+    spark.read.schema(Schemas.statusLog).parquet(statusPath)
 
   /** S4: existing dedup keys — a column-pruned scan. No `distinct`: the
     * store holds each key once, and the anti-join's result is the same
@@ -113,7 +119,7 @@ final class GamesStore(root: String) extends Serializable {
       s"$root/_staging/games_${java.util.UUID.randomUUID().toString}"
     fresh.write.mode("overwrite").parquet(stagingPath)
     try {
-      val staged = spark.read.parquet(stagingPath)
+      val staged = spark.read.schema(Schemas.gamesFact).parquet(stagingPath)
       val appended = staged.groupBy(col("username")).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       if (appended.nonEmpty) staged.write.mode("append").parquet(gamesPath)

@@ -1,6 +1,6 @@
 package graft.semantic
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,17 +10,47 @@ import graft.etl.GameTransforms
   * v5–v14) over the derived games fact. Every method takes a
   * [[FilterContext]] — the page's active slicers — reproducing the BI
   * cross-filter semantics (each visual's aggregate is evaluated under the
-  * conjunction of all active filters), and is `visual(counters(ctx(fact),
-  * grain))`: the companion's reader of the same name over the counters of
-  * the visual's grain. The measures A1–A11 are defined there.
+  * conjunction of all active filters), and is `visual(grain(pass, g))`:
+  * the companion's reader of the same name over the counters of the
+  * visual's grain. The measures A1–A11 are defined there.
+  *
+  * One pass per page context: the first visual rendered under a context
+  * runs [[Dashboard.allCounters]] over `ctx(fact)` — the counters of all
+  * six grains in one aggregate — and marks it for a lazy local checkpoint,
+  * so the first action materializes it and every visual under an equal
+  * context (`FilterContext` equality is structural) reads its grain from
+  * the kept rows instead of re-aggregating the fact. The pass still reads
+  * the fact: slicers filter games before aggregation, so a non-empty
+  * context cannot be answered from unfiltered counters.
+  *
+  * Only the latest context's pass is kept: rendering under a new context
+  * releases the previous pass's blocks, so a frame returned under the old
+  * context must be collected before the context changes. Visuals of one
+  * page may render from several threads at once; they share one pass.
+  * Like the store's file listing, which `gamesFact` fixed when it was
+  * built, the pass is a snapshot: later appends do not reach it.
   */
 final class Dashboard(gamesFact: DataFrame) {
 
   /** Derived fact shared by all visuals. */
   val fact: DataFrame = GameTransforms.withDerived(gamesFact)
 
+  /** The latest context and its counter pass. */
+  private var latest: Option[(FilterContext, DataFrame)] = None
+
+  private def pass(ctx: FilterContext): DataFrame = synchronized {
+    latest match {
+      case Some((c, all)) if c == ctx => all
+      case prev =>
+        prev.foreach { case (_, all) => GraftColumns.unpersistCheckpoint(all) }
+        val all = GraftColumns.lazyCheckpoint(Dashboard.allCounters(ctx(fact)))
+        latest = Some(ctx -> all)
+        all
+    }
+  }
+
   private def at(grain: String, ctx: FilterContext): DataFrame =
-    Dashboard.counters(ctx(fact), Dashboard.grainDims(grain))
+    Dashboard.grain(pass(ctx), grain)
 
   /** v5/v11 KPI cards + donut. */
   def cards(ctx: FilterContext = FilterContext.empty): DataFrame =
@@ -66,11 +96,13 @@ final class Dashboard(gamesFact: DataFrame) {
   *  - A11 (`Rolling12Days_WinRate`) is the same rate over a trailing
   *    window of the daily grain.
   *
-  * The batch dashboard aggregates a grain's counters from the fact on
-  * every call; the streaming dashboard keeps them as per-grain state and
-  * hands its latest committed version to the same readers. Each reader
-  * below takes the counters of one grain (a frame with the grain's dims
-  * plus `games`, `wins`, `losses`, `draws`).
+  * Both dashboards aggregate the counters of all six grains in one pass,
+  * [[allCounters]], and read one grain of it with [[grain]]: the batch
+  * dashboard once per page context, the streaming dashboard once per
+  * micro-batch (whose grains it then merges into per-grain state, handing
+  * the latest committed state to the same readers). Each reader below
+  * takes the counters of one grain (a frame with the grain's dims plus
+  * `games`, `wins`, `losses`, `draws`).
   */
 object Dashboard {
   import ChessMeasures.{drawExpr, lossExpr, winExpr}
@@ -88,16 +120,48 @@ object Dashboard {
 
   private val grainDims: Map[String, Seq[String]] = Grains.toMap
 
+  /** Every grain's dims, once each: the dims of [[allCounters]]. */
+  private val AllDims: Seq[String] = Grains.flatMap(_._2).distinct
+
   /** The additive counters every grain carries. */
   private[graft] val Counters: Seq[String] = Seq("games", "wins", "losses", "draws")
 
-  /** The counters at `dims` grain over a DERIVED fact: one row per key,
-    * or one row in all for the global grain (null sums on an empty fact).
+  /** The counters of every grain over a DERIVED fact, in one aggregate
+    * (`GROUPING SETS`, one set per grain): a long-format frame of
+    * `grain` (the grain's name), [[AllDims]] (null where the grain lacks
+    * the dim) and `games`, `wins`, `losses`, `draws`. A key's row is
+    * told from another grain's by `grain`, never by its nulls, so a null
+    * key (the BI "(Blank)" member) is a row of its own grain. An empty
+    * fact yields no rows, not even the global one; [[grain]] restores it.
     */
-  def counters(derived: DataFrame, dims: Seq[String]): DataFrame =
-    derived.groupBy(dims.map(col): _*)
-      .agg(count(lit(1)).as("games"), sum(winExpr).as("wins"),
-           sum(lossExpr).as("losses"), sum(drawExpr).as("draws"))
+  def allCounters(derived: DataFrame): DataFrame = {
+    // grouping_id() sets one bit per dim a set leaves out, the first dim
+    // the most significant
+    def id(dims: Seq[String]): Long =
+      AllDims.foldLeft(0L)((acc, d) => acc * 2 + (if (dims.contains(d)) 0 else 1))
+    val name = Grains.foldLeft(lit(null).cast("string")) { case (acc, (g, dims)) =>
+      when(col("grouping_id") === id(dims), g).otherwise(acc) }
+    derived.groupingSets(Grains.map(_._2.map(col)), AllDims.map(col): _*)
+      .agg(grouping_id().as("grouping_id"), count(lit(1)).as("games"),
+           sum(winExpr).as("wins"), sum(lossExpr).as("losses"),
+           sum(drawExpr).as("draws"))
+      .select(name.as("grain") +: (AllDims ++ Counters).map(col): _*)
+  }
+
+  /** One grain of an [[allCounters]] frame: the grain's dims plus the
+    * counters, in ONE partition, so the readers' sorts, Top-N and window
+    * plan no exchange over it. The global grain is re-aggregated from
+    * its row, so an empty fact still yields its one row, `(0, null,
+    * null, null)` — the value of a global aggregate over no games.
+    */
+  def grain(all: DataFrame, g: String): DataFrame = {
+    val rows = all.filter(col("grain") === g).coalesce(1)
+    if (g == "global")
+      rows.agg(coalesce(sum(col("games")), lit(0L)).as("games"),
+               sum(col("wins")).as("wins"), sum(col("losses")).as("losses"),
+               sum(col("draws")).as("draws"))
+    else rows.select((grainDims(g) ++ Counters).map(col): _*)
+  }
 
   /** A5–A7 win rate: null-safe `wins / games`. */
   private def winRate: Column =
@@ -156,7 +220,9 @@ object Dashboard {
     * Scaffold-joins the generated DateTable spanning the grain's min→max
     * date so zero-game days exist in the frame (a row-frame window over
     * sparse dates would silently widen the window — SURVEY.md §7.4), then
-    * a range frame over epoch-days. The visual plots the measure on
+    * a range frame over epoch-days. The window has no `partitionBy`, so it
+    * runs in one partition — over the days of the grain, not over games.
+    * The visual plots the measure on
     * `DateTable.Date Hierarchy.{Year,Month,Day}` (pbix!Layout[v6]), so the
     * dim's year/month/month_name/day attributes ride along in the output —
     * consumers drill the hierarchy without re-deriving date parts.

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -14,17 +14,21 @@ import graft.semantic.{Dashboard, FilterContext}
   * far (`StreamingDashboardSpec` pins all six visuals after EVERY batch,
   * plus crash replay as a no-op).
   *
-  * This object only keeps the state. The grains, the counter aggregation
-  * and the six visual readers — the definitions of the measures A1–A11 —
-  * live in the [[Dashboard]] companion, and the readers here hand it the
-  * latest committed state of their grain:
+  * This object only keeps the state. The grains, the one counter
+  * aggregation and the six visual readers — the definitions of the
+  * measures A1–A11 — live in the [[Dashboard]] companion, and the readers
+  * here hand it the latest committed state of their grain:
   *
   *  - Each grain's state is the four ADDITIVE counters (games, wins,
-  *    losses, draws) per key, so batch partials ([[Dashboard.counters]]
-  *    over the batch) sum into the accumulated per-key row. Per batch this
-  *    costs `|batch| + |state keys|`, independent of history — the reason
-  *    a dashboard over a 100 TB game archive can update per micro-batch at
-  *    all. Rates are derived at read time, never merged.
+  *    losses, draws) per key, so batch partials sum into the accumulated
+  *    per-key row. A batch's partials of all six grains come from ONE
+  *    aggregate over the batch ([[Dashboard.allCounters]], kept as a lazy
+  *    local checkpoint while the six versions are written), read one
+  *    grain at a time with [[Dashboard.grain]] — the same pass the batch
+  *    dashboard reads its page from. Per batch this costs `|batch| +
+  *    |state keys|`, independent of history — the reason a dashboard over
+  *    a 100 TB game archive can update per micro-batch at all. Rates are
+  *    derived at read time, never merged.
   *  - The Top-N visuals (v7 opponents, v14 openings) and the rolling
   *    12-day window (v6) are CORPUS-GLOBAL, but over the per-key STATE
   *    (opponents/ECO/days — dimension-sized, not fact-sized), so the
@@ -66,11 +70,12 @@ object StreamingDashboard {
   def dashboardBatch(batch: DataFrame, stateRoot: String, batchId: Long,
                      ctx: FilterContext = FilterContext.empty): Unit = {
     val s = batch.sparkSession
-    // derive once per batch, share across the six grain aggregations
-    val derived = ctx(GameTransforms.withDerived(batch)).cache()
+    // one counter pass per batch, read by all six grain merges
+    val all = GraftColumns.lazyCheckpoint(
+      Dashboard.allCounters(ctx(GameTransforms.withDerived(batch))))
     try {
       Grains.foreach { case (grain, dims) =>
-        val part = Dashboard.counters(derived, dims)
+        val part = Dashboard.grain(all, grain)
         val merged = StreamingAgg
           .latestState(s, s"$stateRoot/$grain", beforeBatchId = batchId) match {
           case Some((_, prev)) => merge(prev, part, dims)
@@ -79,7 +84,7 @@ object StreamingDashboard {
         merged.write.mode("overwrite")
           .parquet(s"$stateRoot/$grain/batch=$batchId")
       }
-    } finally derived.unpersist()
+    } finally GraftColumns.unpersistCheckpoint(all)
   }
 
   /** Wire the stream: raw game micro-batches → [[dashboardBatch]].

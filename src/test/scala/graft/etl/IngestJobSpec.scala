@@ -225,6 +225,25 @@ class IngestJobSpec extends SparkSpec {
     assert(g.result == "1-0")
   }
 
+  test("every parquet file of every store table starts with its pinned " +
+       "schema (the reads' Schemas match what the writers write)") {
+    val (job, store, _) = freshEnv(userPages("alice"))
+    job.run("alice")
+    Seq(store.gamesPath -> Schemas.gamesFact, store.ledgerPath -> Schemas.ledger,
+        store.statusPath -> Schemas.statusLog).foreach { case (path, pinned) =>
+      val files = Files.list(Paths.get(path)).toArray.map(_.toString)
+        .filter(_.endsWith(".parquet"))
+      // the header ensureAll wrote, plus at least one appended file
+      assert(files.length >= 2, s"$path: ${files.toSeq}")
+      val want = pinned.fields.map(f => (f.name, f.dataType)).toSeq
+      files.foreach { f =>
+        val footer = spark.read.parquet(f).schema.fields
+          .map(f => (f.name, f.dataType)).toSeq
+        assert(footer.startsWith(want), s"$f: $footer")
+      }
+    }
+  }
+
   test("one run costs the same Spark jobs for one user as for three") {
     val users = Seq("ann", "ben", "cal")
     def jobs(csv: Seq[String]): Int = {

@@ -1,9 +1,10 @@
 package graft.semantic
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumns}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.obs.Meter
 
 /** Measure/dashboard semantics over a hand-built fact with known answers,
   * including the non-canonical result vocabulary and sparse-date rolling
@@ -142,5 +143,89 @@ class DashboardSpec extends SparkSpec {
     assert(rows.length == 1)
     assert(rows(0).getAs[String]("eco") == "B20")
     assert(rows(0).getAs[Double]("win_rate") == 1.0)
+  }
+
+  /** Ids of the graft checkpoints the session holds pinned. */
+  private def pinnedCheckpoints: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.values
+      .filter(_.name == GraftColumns.CheckpointTag).map(_.id).toSet
+
+  test("one counter pass per page: under equal contexts the Top-N, matrix " +
+       "and band visuals run one job each, with no Exchange") {
+    val d = new Dashboard(base)
+    // a freshly built context per visual, equal to every other
+    def ctx = FilterContext.empty.and(col("username") === "alice")
+    assert(d.cards(ctx).collect()(0).getAs[Long]("total_games") == 8)
+    val visuals: Seq[(String, () => DataFrame)] = Seq(
+      "opponents"       -> (() => d.topOpponents(10, ctx)),
+      "bucket_color"    -> (() => d.winRateByBucketAndColor(ctx)),
+      "opponent_bucket" -> (() => d.winRateByOpponentBucket(ctx)),
+      "openings"        -> (() => d.topOpenings(5, ctx)))
+    visuals.foreach { case (name, visual) =>
+      val (rows, counts) = Meter.during(spark) {
+        withCapturedPlans(visual().collect()) { plans =>
+          assert(plans.forall(!_.contains("Exchange")), s"$name: $plans")
+        }
+      }
+      assert(counts.jobs == 1, s"$name ran ${counts.jobs} jobs")
+      assert(rows.nonEmpty, name)
+    }
+    assert(d.rollingWinRate(spark, 3, ctx).collect().length == 14)
+  }
+
+  test("cards under a context that matches no game: one row of 0 games " +
+       "and null counters") {
+    val none = FilterContext.empty.and(col("username") === "nobody")
+    val rows = dash.cards(none).collect()
+    assert(rows.length == 1)
+    assert(rows(0).getAs[Long]("total_games") == 0L)
+    assert((1 until 5).forall(rows(0).isNullAt), rows(0))
+  }
+
+  test("a null opponent is its own Top-N row, not merged with the rows " +
+       "of other grains") {
+    val blank = new Dashboard(fact(Seq(
+      ("g1", "2025-07-01", "alice", null, "1-0", "300", 1480),
+      ("g2", "2025-07-02", "alice", null, "0-1", "300", 1480),
+      ("g3", "2025-07-02", "alice", null, "1-0", "60", 1480),
+      ("g4", "2025-07-03", "alice", "bob", "1-0", "300", 1480))))
+    val rows = blank.topOpponents(10).collect().map(r =>
+      (Option(r.getAs[String]("opponent_username")),
+       r.getAs[Long]("games_count"), r.getAs[Long]("wins"))).toSeq
+    assert(rows === Seq((None, 3L, 2L), (Some("bob"), 1L, 1L)))
+    assert(blank.cards().collect()(0).getAs[Long]("total_games") == 4L)
+  }
+
+  test("a new context releases the previous context's pass: one stays pinned") {
+    val before = pinnedCheckpoints
+    val d = new Dashboard(base)
+    val white = FilterContext.empty.and(col("user_color") === "white")
+    val black = FilterContext.empty.and(col("user_color") === "black")
+    assert(d.cards(white).collect()(0).getAs[Long]("total_games") == 4)
+    assert(d.topOpponents(10, white).collect().nonEmpty)
+    assert(d.cards(black).collect()(0).getAs[Long]("total_games") == 4)
+    assert(d.topOpponents(10, black).collect().nonEmpty)
+    assert((pinnedCheckpoints -- before).size == 1)
+  }
+
+  test("visuals of one page rendered from two threads share one pass") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    def ctx = FilterContext.empty.and(col("username") === "alice")
+    def page(d: Dashboard): Seq[() => DataFrame] = Seq(
+      () => d.cards(ctx), () => d.topOpponents(10, ctx),
+      () => d.winRateByBucketAndColor(ctx), () => d.winRateByOpponentBucket(ctx),
+      () => d.topOpenings(5, ctx), () => d.rollingWinRate(spark, 3, ctx))
+    val want = page(new Dashboard(base)).map(_().collect().toSeq)
+    val before = pinnedCheckpoints
+    val d = new Dashboard(base)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val got = Await.result(Future.traverse(page(d) ++ page(d))(v =>
+        Future(v().collect().toSeq)), 5.minutes)
+      assert(got === want ++ want)
+    } finally pool.shutdown()
+    assert((pinnedCheckpoints -- before).size == 1)
   }
 }
