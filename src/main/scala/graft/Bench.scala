@@ -45,7 +45,8 @@ object Bench {
     // loadavg at each sample start is recorded so the reader can see
     // WHICH samples were loaded.
     //
-    // Shuffle/spill bytes, jobs and task counts are metered PER SWEEP
+    // Shuffle/spill bytes, jobs, task counts and codegen compiles are
+    // metered PER SWEEP
     // (r11 verdict #1): the old one-snapshot-on-the-last-sweep shape
     // could not distinguish a re-executed stage from an accounting leak
     // when the driver's r11 artifact showed q269 at exactly 2× the
@@ -161,6 +162,8 @@ object Bench {
         s"\"sweep_tasks\":${arr(r.perSweep.map(_.tasks))}," +
         s"\"sweep_failed_tasks\":${arr(r.perSweep.map(_.failedTasks))}," +
         s"\"sweep_jobs\":${arr(r.perSweep.map(_.jobs))}," +
+        s"\"sweep_compiles\":${arr(r.perSweep.map(_.compiles))}," +
+        s"\"sweep_compile_ms\":${arr(r.perSweep.map(c => f"${c.compileMs}%.1f"))}," +
         s"\"sweep_persisted_rdds\":${arr(r.released.map(_.rdds))}," +
         s"\"sweep_persisted_bytes\":${arr(r.released.map(_.bytes))}," +
         s"\"sweep_sec\":${r.sweepSec.mkString("[", ",", "]")}," +

@@ -9,8 +9,30 @@ import org.apache.spark.sql.SparkSession
   * re-planning (skew joins, dynamic coalescing of shuffle partitions) and an
   * explicit shuffle-partition count sized to the parallelism instead of the
   * legacy default of 200.
+  *
+  * The JVM-wide cache of compiled generated classes is sized to the
+  * engine's working set ([[CodegenCacheEntries]]), so a long-lived session
+  * compiles each class once instead of recompiling it on every pass.
   */
 object GraftSession {
+
+  /** Entries of Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). Measured
+    * working sets, in distinct classes: a daily cycle (an ingest run, its
+    * correctness gate and a six-visual dashboard page) about 140, a pass
+    * of the benchmark's query set about 120, and q269, the heaviest
+    * query, 98 alone. Under the default cap each cycle evicts its own
+    * classes and recompiles them all; 1,000 holds several working sets.
+    *
+    * The cap stays bounded because some classes inline a literal, so each
+    * new value compiles a new class that no later pass reuses: the
+    * ingest's `current_timestamp()` adds 4 classes per run, and a
+    * date-range slicer 2 per page. A long-running stream or BI session
+    * would pile those up without bound under a cap of, say, 100,000. The
+    * cache is created once per JVM, from the conf of the session active
+    * when Spark first generates code.
+    */
+  val CodegenCacheEntries: Int = 1000
 
   /** Build a local session. `cores` defaults to the driver-provided
     * SPARK_GRAFT_CPUS so bench/verify runs match the harness sizing.
@@ -49,4 +71,5 @@ object GraftSession {
       // native type for; read as long nanos and normalize in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
 }

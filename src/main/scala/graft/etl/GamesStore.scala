@@ -29,7 +29,9 @@ final class GamesStore(root: String) extends Serializable {
 
   /** Ensure a table dir exists with the expected schema; on mismatch the
     * table is reset (truncate-and-rewrite-header semantics of the
-    * reference's sheet repair, `fetch_and_post.py:197-227`).
+    * reference's sheet repair, `fetch_and_post.py:197-227`). The check
+    * compares the (name, type) pairs of [[footerSchema]] against the
+    * expected schema's as a prefix, and runs no Spark job.
     */
   def ensure(spark: SparkSession, path: String, schema: StructType): Unit = {
     def emptyWrite(): Unit =
@@ -37,10 +39,39 @@ final class GamesStore(root: String) extends Serializable {
         .write.mode("overwrite").parquet(path)
     if (!exists(spark, path)) emptyWrite()
     else {
-      val actual = spark.read.parquet(path).schema
+      val actual = footerSchema(spark, path)
       val expected = schema.fields.map(f => (f.name, f.dataType)).toSeq
       val got = actual.fields.map(f => (f.name, f.dataType)).toSeq
       if (!got.startsWith(expected)) emptyWrite()
+    }
+  }
+
+  /** The schema in the footer of the table's first data file by name,
+    * read on the driver: the Spark schema a Spark writer stores under
+    * `org.apache.spark.sql.parquet.row.metadata`, else the conversion of
+    * the parquet schema — what a schema-less read infers with one job.
+    * A directory with no data file is left to that read, which raises
+    * Spark's own "unable to infer schema" error.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(path)
+    val first = dir.getFileSystem(conf).listStatus(dir)
+      .collect { case s if s.isFile => s.getPath }
+      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      .minByOption(_.getName)
+    first match {
+      case None => spark.read.parquet(path).schema
+      case Some(file) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+        val footer = try reader.getFooter finally reader.close()
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+          new ParquetToSparkSchemaConverter(SQLConf.get))
     }
   }
 
@@ -59,7 +90,6 @@ final class GamesStore(root: String) extends Serializable {
 
   /** Each table is read with its pinned schema ([[Schemas]]): a
     * schema-less parquet read runs a Spark job to infer it from a footer.
-    * The K4 drift check ([[ensure]]) still reads the footer.
     */
   def games(spark: SparkSession): DataFrame =
     spark.read.schema(Schemas.gamesFact).parquet(gamesPath)

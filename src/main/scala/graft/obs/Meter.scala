@@ -4,7 +4,8 @@ import scala.collection.mutable
 
 import org.apache.spark.{GraftBus, SparkContext, Success}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftCodegenAudit, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Wall time and number of the finished jobs that carried one job
   * description. */
@@ -13,12 +14,19 @@ final case class JobTime(ms: Long, jobs: Long)
 /** What a [[Meter]] counted. `jobs` counts started jobs; `jobTime` groups
   * finished jobs by their `spark.job.description` (`<unlabeled>` when
   * none was set), timed by the scheduler's own start and end stamps.
+  *
+  * `compiles` and `compileMs` are the generated classes Janino compiled
+  * and its compile time. They are JVM-wide, read from Spark's codegen
+  * counters rather than from the listener bus: they hold compiles by any
+  * session or thread of the JVM that ran at the same time, and classes
+  * served from the compile cache are not compiles.
   */
 final case class Counts(
     jobs: Long = 0L, tasks: Long = 0L, failedTasks: Long = 0L,
     shuffleWriteBytes: Long = 0L, shuffleReadBytes: Long = 0L,
     memorySpillBytes: Long = 0L, diskSpillBytes: Long = 0L,
-    inputBytes: Long = 0L, jobTime: Map[String, JobTime] = Map.empty) {
+    inputBytes: Long = 0L, jobTime: Map[String, JobTime] = Map.empty,
+    compiles: Long = 0L, compileMs: Double = 0.0) {
   def shuffleBytes: Long = shuffleWriteBytes + shuffleReadBytes
   def spillBytes: Long = memorySpillBytes + diskSpillBytes
 
@@ -31,7 +39,8 @@ final case class Counts(
     jobTime.iterator.map { case (d, t) =>
       val b = o.jobTime.getOrElse(d, JobTime(0L, 0L))
       d -> JobTime(t.ms - b.ms, t.jobs - b.jobs)
-    }.filter(_._2.jobs != 0L).toMap)
+    }.filter(_._2.jobs != 0L).toMap,
+    compiles - o.compiles, compileMs - o.compileMs)
 }
 
 /** The one metrics listener: cumulative job, task, shuffle, spill and
@@ -43,7 +52,10 @@ final class Meter private () extends SparkListener {
   private var counts = Counts()
   private val started = mutable.Map.empty[Int, (String, Long)]
 
-  private def snapshot: Counts = synchronized(counts)
+  /** The listener's counts plus the JVM's codegen counters. */
+  private def snapshot: Counts = synchronized(counts).copy(
+    compiles = GraftCodegenAudit.compiles,
+    compileMs = CodeGenerator.compileTime / 1e6)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     val desc = Option(e.properties)
@@ -89,7 +101,8 @@ object Meter {
 
   /** Runs `body` and returns its result with what the session's Meter
     * counted while it ran: drains the listener bus, takes a snapshot,
-    * runs `body`, drains again and returns the difference. */
+    * runs `body`, drains again and returns the difference. The codegen
+    * compiles are the JVM's, not only the session's (see [[Counts]]). */
   def during[A](spark: SparkSession)(body: => A): (A, Counts) = {
     val sc = spark.sparkContext
     val meter = of(sc)

@@ -29,8 +29,11 @@ import graft.etl.GameTransforms
   * page may render from several threads at once; they share one pass.
   * Like the store's file listing, which `gamesFact` fixed when it was
   * built, the pass is a snapshot: later appends do not reach it.
+  * [[close]] releases the latest pass, so a page's pass is not left
+  * pinned until driver GC; a closed dashboard renders again with a new
+  * pass.
   */
-final class Dashboard(gamesFact: DataFrame) {
+final class Dashboard(gamesFact: DataFrame) extends AutoCloseable {
 
   /** Derived fact shared by all visuals. */
   val fact: DataFrame = GameTransforms.withDerived(gamesFact)
@@ -41,12 +44,19 @@ final class Dashboard(gamesFact: DataFrame) {
   private def pass(ctx: FilterContext): DataFrame = synchronized {
     latest match {
       case Some((c, all)) if c == ctx => all
-      case prev =>
-        prev.foreach { case (_, all) => GraftColumns.unpersistCheckpoint(all) }
+      case _ =>
+        close()
         val all = GraftColumns.lazyCheckpoint(Dashboard.allCounters(ctx(fact)))
         latest = Some(ctx -> all)
         all
     }
+  }
+
+  /** Releases the latest context's pass. Frames rendered from it must
+    * be collected first. */
+  override def close(): Unit = synchronized {
+    latest.foreach { case (_, all) => GraftColumns.unpersistCheckpoint(all) }
+    latest = None
   }
 
   private def at(grain: String, ctx: FilterContext): DataFrame =

@@ -27,12 +27,10 @@ object Inspect {
   val PinnedNearLimit: Map[String, String] = Map.empty
 
   def main(args: Array[String]): Unit = {
+    // the compile cache (GraftSession.CodegenCacheEntries) is the audit's
+    // witness for intermediate-job classes, and keeps a query's warm-up
+    // classes for its timed `jobs` run
     val spark = GraftSession.builder("graft-inspect", GraftSession.envCores(32))
-      // the compile cache is the audit's witness for intermediate-job
-      // classes, and keeps a query's warm-up classes for its timed `jobs`
-      // run; the default 100-entry cap can evict a heavy query's OWN
-      // classes (q269 alone compiles 98)
-      .config("spark.sql.codegen.cache.maxEntries", "100000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val code = try run(spark, args) finally spark.stop()

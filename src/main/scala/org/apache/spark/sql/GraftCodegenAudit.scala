@@ -97,6 +97,12 @@ object GraftCodegenAudit {
     }
   }
 
+  /** Generated classes Janino has compiled in this JVM (cache misses;
+    * a hit compiles nothing). `CodegenMetrics` is `private[spark]`.
+    */
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One compiled generated class as seen in [[CodeGenerator]]'s
     * compile cache: an identity token for diffing, the class's largest
     * method (bytecode bytes), and enough of the source to name it.
@@ -122,8 +128,11 @@ object GraftCodegenAudit {
     * already compiled by an earlier query are cache hits and stay
     * attributed to their first compiler — fine for a zero-over-limit
     * suite guarantee, which is a property of the UNION). The cache is
-    * capacity-bounded (`spark.sql.codegen.cache.maxEntries`, default
-    * 100), so diff per query, not once at the end.
+    * capacity-bounded (`spark.sql.codegen.cache.maxEntries`, which
+    * `graft.GraftSession` sets to `CodegenCacheEntries`, 1,000, well
+    * above one query's classes: q269 compiles 98), so diff per query,
+    * not once at the end: over a whole suite the oldest classes are
+    * evicted, and one recompiled later counts as the later query's.
     */
   def compileCacheSnapshot(): Seq[CacheEntry] = {
     import scala.jdk.CollectionConverters._

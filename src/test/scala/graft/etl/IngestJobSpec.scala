@@ -211,6 +211,40 @@ class IngestJobSpec extends SparkSpec {
     assert(store.games(spark).count() == 0)
   }
 
+  test("ensureAll over an existing store runs no Spark job, and tables " +
+       "whose footers match keep their rows") {
+    val (job, store, _) = freshEnv(userPages("alice"))
+    job.run("alice")
+    def rows = (store.games(spark).count(), store.ledger(spark).count(),
+                store.status(spark).count())
+    val before = rows
+    assert(before._1 == 3L && before._2 == 2L, before)
+    assert(jobsDuring(store.ensureAll(spark)) == 0)
+    assert(rows == before)
+  }
+
+  test("schema repair: a drifted ledger footer (long game_count) is reset (K4)") {
+    import spark.implicits._
+    val (job, store, _) = freshEnv(userPages("alice"))
+    job.run("alice")
+    Seq(("alice", "a", new java.sql.Timestamp(0L), 3L))
+      .toDF("username", "archive_url", "processed_at_utc", "game_count")
+      .write.mode("overwrite").parquet(store.ledgerPath)
+    store.ensureAll(spark)
+    assert(store.ledger(spark).count() == 0)
+    val footer = spark.read.parquet(store.ledgerPath).schema
+    assert(footer("game_count").dataType == Schemas.ledger("game_count").dataType)
+  }
+
+  test("ensure over a directory with no data file raises, as a schema-less read does") {
+    val dir = Files.createTempDirectory("graft-nofile").toString
+    val store = new GamesStore(s"$dir/warehouse")
+    Files.createDirectories(Paths.get(store.ledgerPath))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      store.ensure(spark, store.ledgerPath, Schemas.ledger)
+    }
+  }
+
   test("typed Dataset view matches the fact schema end-to-end") {
     val pages = Map(
       archivesFor("alice", a1),

@@ -206,6 +206,12 @@ class DashboardSpec extends SparkSpec {
     assert(d.cards(black).collect()(0).getAs[Long]("total_games") == 4)
     assert(d.topOpponents(10, black).collect().nonEmpty)
     assert((pinnedCheckpoints -- before).size == 1)
+    d.close()
+    assert((pinnedCheckpoints -- before).isEmpty)
+    // a closed dashboard renders again from a new pass
+    assert(d.cards(white).collect()(0).getAs[Long]("total_games") == 4)
+    d.close()
+    assert((pinnedCheckpoints -- before).isEmpty)
   }
 
   test("visuals of one page rendered from two threads share one pass") {

@@ -39,25 +39,27 @@ class StreamingDashboardSpec extends SparkSpec {
   private def assertVisualsEqual(union: DataFrame, root: String,
                                  ctx: FilterContext, label: String): Unit = {
     val b = new Dashboard(union)
-    val pairs = Seq(
-      "cards" -> (b.cards(ctx),
-        StreamingDashboard.cards(spark, root)),
-      "matrix" -> (b.winRateByBucketAndColor(ctx),
-        StreamingDashboard.winRateByBucketAndColor(spark, root)),
-      "bands" -> (b.winRateByOpponentBucket(ctx),
-        StreamingDashboard.winRateByOpponentBucket(spark, root)),
-      "opponents" -> (b.topOpponents(10, ctx),
-        StreamingDashboard.topOpponents(spark, root, 10)),
-      "openings" -> (b.topOpenings(5, ctx),
-        StreamingDashboard.topOpenings(spark, root, 5)),
-      "rolling" -> (b.rollingWinRate(spark, 12, ctx),
-        StreamingDashboard.rollingWinRate(spark, root, 12)))
-    pairs.foreach { case (name, (batch, stream)) =>
-      assert(batch.columns.toSeq === stream.columns.toSeq,
-             s"$label/$name: column drift")
-      assert(rows(batch) === rows(stream),
-             s"$label/$name: streamed visual diverged from batch Dashboard")
-    }
+    try {
+      val pairs = Seq(
+        "cards" -> (b.cards(ctx),
+          StreamingDashboard.cards(spark, root)),
+        "matrix" -> (b.winRateByBucketAndColor(ctx),
+          StreamingDashboard.winRateByBucketAndColor(spark, root)),
+        "bands" -> (b.winRateByOpponentBucket(ctx),
+          StreamingDashboard.winRateByOpponentBucket(spark, root)),
+        "opponents" -> (b.topOpponents(10, ctx),
+          StreamingDashboard.topOpponents(spark, root, 10)),
+        "openings" -> (b.topOpenings(5, ctx),
+          StreamingDashboard.topOpenings(spark, root, 5)),
+        "rolling" -> (b.rollingWinRate(spark, 12, ctx),
+          StreamingDashboard.rollingWinRate(spark, root, 12)))
+      pairs.foreach { case (name, (batch, stream)) =>
+        assert(batch.columns.toSeq === stream.columns.toSeq,
+               s"$label/$name: column drift")
+        assert(rows(batch) === rows(stream),
+               s"$label/$name: streamed visual diverged from batch Dashboard")
+      }
+    } finally b.close()
   }
 
   test("every visual equals the batch Dashboard after EVERY batch; " +
