@@ -194,8 +194,4 @@ final class GamesStore(root: String) extends Serializable {
         .coalesce(1)
         .write.mode("append").parquet(statusPath)
     } catch { case scala.util.control.NonFatal(_) => () }
-
-  def appendStatus(spark: SparkSession, runId: String, username: String,
-                   stage: String, message: String, httpStatus: String): Unit =
-    appendStatusRows(spark, runId, Seq((username, stage, message, httpStatus)))
 }

@@ -228,20 +228,10 @@ object Sampling {
     * value is bit-reproducible across engines.
     */
   def smoothedQuotas(df: DataFrame, sourceCol: String,
-                     budget: Long): DataFrame =
-    smoothedQuotasFromSizes(
-      df.groupBy(col(sourceCol).as("source"))
-        .agg(count(lit(1)).as("n")), budget)
-
-  /** [[smoothedQuotas]] from a pre-aggregated (source, n) size table —
-    * the entry point for callers that already maintain the counts
-    * (e.g. [[graft.streaming.StreamingMix]]'s per-batch state), so the
-    * streamed allocation runs through the IDENTICAL weight and
-    * apportionment arithmetic the batch query gates.
-    */
-  def smoothedQuotasFromSizes(sizes: DataFrame, budget: Long)
-      : DataFrame = {
+                     budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be >= 0: $budget")
+    val sizes = df.groupBy(col(sourceCol).as("source"))
+      .agg(count(lit(1)).as("n"))
     // [[isqrtExpr]]'s exactness contract is m < 2^53, which n·10⁶
     // crosses at n > 9 007 199 254 (~9.0e9 rows per source) — and the
     // long product itself wraps silently negative past ~9.2e12 in
@@ -262,7 +252,7 @@ object Sampling {
     apportion(weighted, budget)
   }
 
-  /** Largest per-source size [[smoothedQuotasFromSizes]] accepts:
+  /** Largest per-source size [[smoothedQuotas]] accepts:
     * ⌊(2⁵³ − 1)/10⁶⌋, the boundary of [[isqrtExpr]]'s exact domain
     * for the n·10⁶ weight input. */
   val IsqrtMaxN: Long = ((1L << 53) - 1) / 1000000L

@@ -29,9 +29,8 @@ import org.apache.spark.sql.types.IntegerType
   * survives), and null inputs yield null in both forms, making the
   * comparison null in both plans.
   *
-  * Always ON once injected (pure expression equivalence — there is no
-  * knob to guess, unlike [[RangeJoinRewrite]]'s bucket width) and
-  * idempotent: the rewritten node carries a threshold, which the
+  * Always ON once enabled (pure expression equivalence — there is no
+  * knob to guess) and idempotent: the rewritten node carries a threshold, which the
   * pattern excludes. Degenerate literals (`<= −1`, `> −1`, `>= 0`,
   * `= −1`, …) are left untouched: their constant-valued equivalents
   * are NOT plain `true`/`false` — a null input must still yield null
@@ -41,8 +40,8 @@ import org.apache.spark.sql.types.IntegerType
   */
 object LevenshteinThresholdRewrite extends Rule[LogicalPlan] {
 
-  /** Runtime enablement for an already-built session (the
-    * `withExtensions` path only applies at construction time).
+  /** Adds the rule to the session's extra optimizations, once; it
+    * stays on for the rest of the session.
     */
   def enable(session: SparkSession): Unit =
     if (!session.experimental.extraOptimizations.contains(this))

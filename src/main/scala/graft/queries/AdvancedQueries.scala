@@ -1222,8 +1222,7 @@ object AdvancedQueries {
     * data, and `LevenshteinThresholdRewriteSpec` pins the rewrite
     * itself (incl. nulls, mirrors, idempotence). The rule stays
     * enabled for the session afterwards — it is a pure expression
-    * equivalence with no knob, the [[graft.plans.GraftExtensions]]
-    * default.
+    * equivalence with no knob.
     */
   def q235LevRewrite(s: SparkSession, dir: String): DataFrame = {
     graft.plans.LevenshteinThresholdRewrite.enable(s)
@@ -1712,19 +1711,12 @@ object AdvancedQueries {
   /** q214 — EVENT-TIME INTERVAL JOIN, batch form: every (error,
     * purchase) pair of the SAME user where the purchase lands in
     * [error_ts, error_ts + 1h] — the does-the-error-precede-a-sale
-    * attribution shape, and the exact batch semantics of
-    * [[graft.streaming.StreamingJoins.intervalJoin]] (key equality +
-    * right ts in [left ts, left ts + within]). This row is the
-    * streaming operator's INDEPENDENT gate: [[StreamingJoinsSpec]]
-    * replays the same events table through MemoryStream micro-batches
-    * and asserts its emitted set equals this query's output, while the
-    * DuckDB oracle gates this query — so the streamed form is checked
-    * against SQL end to end, not merely against another Spark plan.
+    * attribution shape (key equality + right ts in [left ts, left ts +
+    * within]).
     *
     * Plan: ONE shuffle per side on user_id, the interval bounds as a
-    * join-stage filter — exactly the state-store hash-join shape the
-    * streaming form uses, with state ≈ key-rate × interval. The gap is
-    * exact integer microseconds in both engines.
+    * join-stage filter. The gap is exact integer microseconds in both
+    * engines.
     */
   def q214IntervalJoin(s: SparkSession, dir: String): DataFrame = {
     val HourUs = 3600000000L
@@ -1745,13 +1737,8 @@ object AdvancedQueries {
 
   /** q217 — LEFT-OUTER interval join, batch form: q214's semantics
     * with UNMATCHED errors surfacing as null-purchase rows — the "did
-    * this error convert, or not" attribution table, and the batch
-    * form of [[graft.streaming.StreamingJoins.intervalJoinLeftOuter]]
-    * (outer emission is the part of a streaming join people get
-    * wrong: a null row may only emit once the watermark proves no
-    * match can still arrive, which [[StreamingJoinsSpec]] checks by
-    * replaying THESE events and comparing to THIS query). Null
-    * handling across engines: both sides surface genuine SQL NULLs
+    * this error convert, or not" attribution table. Null handling
+    * across engines: both sides surface genuine SQL NULLs
     * and the driver compare treats them positionally after its own
     * sort, so no sentinel encoding is needed.
     *

@@ -1895,17 +1895,11 @@ object CurationQueries {
   def q269CurationDag(s: SparkSession, dir: String): DataFrame =
     curationDagLedger(s, Tables.documents(s, dir))
 
-  /** The q269 DAG over an explicit document frame — q269's body,
-    * factored so the STREAMING composition
-    * ([[graft.streaming.StreamingCuration]], r13 verdict #6) and its
-    * spec can run the identical stages over accumulated micro-batch
-    * unions. Splits as [[curationStages0to3]] (per-document: commutes
-    * with union, so a stream runs it on each batch alone) +
+  /** The q269 DAG over an explicit document frame — q269's body. Splits
+    * as [[curationStages0to3]] (per-document maps and filters) +
     * [[curationStages4to10]] (corpus-global: keeper election,
     * calibration, DSIR and the epoch mix all read the whole
-    * population, so the stream recomputes them over the accumulated
-    * survivors — the only composition that preserves the batch DAG's
-    * semantics exactly).
+    * population).
     */
   private[graft] def curationDagLedger(s: SparkSession,
                                        docs: DataFrame): DataFrame = {
@@ -2012,7 +2006,7 @@ object CurationQueries {
     * lang-id, DSIR, epoch mix, packing, sharding) — all CORPUS-GLOBAL.
     * Takes OWNERSHIP of `d3`'s graft checkpoint (released as soon as
     * stage 4 materializes — the O(1)-storage discipline; a no-op when
-    * `d3` carries none, e.g. the streaming state read). `n3` is the
+    * `d3` carries none). `n3` is the
     * stage-3 survivor count (stage 4's rows_in). Clears the job
     * description on exit.
     */

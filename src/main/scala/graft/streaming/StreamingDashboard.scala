@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{DataFrame, GraftColumns, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -35,11 +37,12 @@ import graft.semantic.{Dashboard, FilterContext}
   *    per-read recompute is a sort-limit / window over thousands of rows,
   *    never over the accumulated facts.
   *
-  * State: [[StreamingAgg]]'s versioned-parquet exactly-once discipline —
+  * State: versioned parquet, exactly once without sink transactions —
   * one dir per grain per batch id (`<root>/<grain>/batch=<id>`),
   * `_SUCCESS`-gated, batch N merges the latest version STRICTLY below
   * N, so an at-least-once replay rewrites its own version
-  * byte-identically and readers never see a partial merge.
+  * byte-identically and readers never see a partial merge. Old versions
+  * stay on disk; the latest committed one is always complete.
   *
   * Slicers: the page's [[FilterContext]] is fixed at stream definition
   * and applied to every batch BEFORE partial aggregation (row-level
@@ -51,6 +54,33 @@ object StreamingDashboard {
 
   /** The grains kept as state: [[Dashboard.Grains]]. */
   val Grains: Seq[(String, Seq[String])] = Dashboard.Grains
+
+  /** Latest COMMITTED state version strictly below `beforeBatchId`
+    * (None = no predecessor). Versions are parquet dirs `batch=<id>`
+    * under `root`.
+    */
+  private def latestState(spark: SparkSession, root: String,
+                          beforeBatchId: Long = Long.MaxValue)
+      : Option[DataFrame] = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) None
+    else {
+      // only fully-committed versions count: a crash mid-write leaves a
+      // batch=<id> dir without _SUCCESS, and an external reader landing
+      // on it would otherwise see a partial merge
+      val ids = fs.listStatus(p).toSeq
+        .filter(st => st.isDirectory &&
+          fs.exists(new Path(st.getPath, "_SUCCESS")))
+        .map(_.getPath.getName)
+        .collect { case n if n.startsWith("batch=") =>
+          n.stripPrefix("batch=").toLong
+        }
+        .filter(_ < beforeBatchId)
+      if (ids.isEmpty) None
+      else Some(spark.read.parquet(s"$root/batch=${ids.max}"))
+    }
+  }
 
   /** Counter-sum merge of accumulated state ∪ batch partials — the
     * additive-measure form of [[graft.operators.IncrementalAgg]]'s
@@ -76,10 +106,10 @@ object StreamingDashboard {
     try {
       Grains.foreach { case (grain, dims) =>
         val part = Dashboard.grain(all, grain)
-        val merged = StreamingAgg
-          .latestState(s, s"$stateRoot/$grain", beforeBatchId = batchId) match {
-          case Some((_, prev)) => merge(prev, part, dims)
-          case None            => part
+        val merged = latestState(s, s"$stateRoot/$grain",
+                                 beforeBatchId = batchId) match {
+          case Some(prev) => merge(prev, part, dims)
+          case None       => part
         }
         merged.write.mode("overwrite")
           .parquet(s"$stateRoot/$grain/batch=$batchId")
@@ -89,8 +119,7 @@ object StreamingDashboard {
 
   /** Wire the stream: raw game micro-batches → [[dashboardBatch]].
     * At-least-once delivery + per-batch-id idempotent versions =
-    * effectively-once state (the [[StreamingDedup.dedupStream]]
-    * contract).
+    * effectively-once state.
     */
   def dashboardStream(games: DataFrame, stateRoot: String,
                       checkpointDir: String,
@@ -110,9 +139,7 @@ object StreamingDashboard {
 
   private def state(spark: SparkSession, stateRoot: String,
                     grain: String): DataFrame =
-    StreamingAgg.latestState(spark, s"$stateRoot/$grain")
-      .map(_._2)
-      .getOrElse(throw new IllegalStateException(
+    latestState(spark, s"$stateRoot/$grain").getOrElse(throw new IllegalStateException(
         s"no committed dashboard state under $stateRoot/$grain — " +
           "run at least one batch first"))
 

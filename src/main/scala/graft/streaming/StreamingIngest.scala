@@ -70,21 +70,4 @@ object StreamingIngest {
     val q = writer.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
   }
-
-  /** Generic streaming aggregation surface: tumbling event-time window
-    * counts per key with late-data handling — the standard
-    * `readStream → withWatermark → groupBy(window) → writeStream` shape
-    * (SURVEY.md §2.10; the reference's only time-window computation is the
-    * BI rolling window, which batch covers — this is the streaming-native
-    * equivalent for live feeds).
-    */
-  def windowedCounts(events: DataFrame, tsCol: String, keyCol: String,
-                     windowLen: String, watermarkDelay: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermarkDelay)
-      .groupBy(window(col(tsCol), windowLen).as("w"), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("window_start"),
-              col("w.end").as("window_end"),
-              col(keyCol), col("n"))
 }

@@ -229,18 +229,4 @@ object GraftColumns {
         l.rdd.unpersist(blocking = false); ()
       case _ => ()
     }
-
-  /** Register a SQL function on an ALREADY-BUILT session (the
-    * `withExtensions`/`spark.sql.extensions` path only applies at session
-    * construction; this covers sessions handed to the library, e.g. by a
-    * driver harness or notebook).
-    */
-  def registerFunction(
-      spark: SparkSession,
-      ident: org.apache.spark.sql.catalyst.FunctionIdentifier,
-      info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-      builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(ident, info, builder)
 }

@@ -6,30 +6,23 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.CountMin
-import graft.queries.{ChessQueries, CurationQueries}
+import graft.queries.ChessQueries
 import graft.semantic.{Dashboard, FilterContext}
 
-/** Fault-injection drive of the versioned-state streaming family (r14
-  * verdict #5): for each operator, batch 0 commits, then a CRASH
-  * MID-WRITE of batch 1 is simulated — its version dir exists with
-  * plausible-but-WRONG parquet content and NO `_SUCCESS` (exactly what
-  * a killed executor leaves). Recovery = the engine replaying batch 1
-  * under its original id must read the prior COMMITTED version (the
-  * poisoned content is inflated ×1000, so reading through the gate
-  * would be caught, not lucked past), produce the batch-recompute
-  * state, and a second replay must rewrite it identically. A later
-  * batch (id 2) must ALSO skip the uncommitted id-1 dir — the case the
-  * id filter alone cannot catch, only the `_SUCCESS` gate.
-  *
-  * [[StreamingDedup]] has no version dirs (corpus-append model); its
-  * crash contract — replay-after-committed-append is a no-op because
-  * the replayed rows dedup against the corpus they just entered, and
-  * a crash mid-append leaves only `_temporary` staging the reader
-  * ignores — is driven in the last test.
+/** Fault-injection drive of [[StreamingDashboard]]'s versioned state
+  * (r14 verdict #5): batch 0 commits, then a CRASH MID-WRITE of batch 1
+  * is simulated — its version dirs exist with plausible-but-WRONG
+  * parquet content and NO `_SUCCESS` (exactly what a killed executor
+  * leaves). Recovery = the engine replaying batch 1 under its original
+  * id must read the prior COMMITTED version (the poisoned counters are
+  * inflated ×1000, so reading through the gate would be caught, not
+  * lucked past), produce the batch-recompute visuals, and a second
+  * replay must rewrite every grain identically. A later batch (id 2)
+  * must ALSO skip an uncommitted id-1 dir, and the readers must skip an
+  * uncommitted dir above every committed one — the cases the id filter
+  * alone cannot catch, only the `_SUCCESS` gate.
   */
 class StreamingCrashRecoverySpec extends SparkSpec {
-  import spark.implicits._
 
   /** Simulate a crash mid-write of version `id`: plausible parquet
     * content, no `_SUCCESS`.
@@ -40,107 +33,59 @@ class StreamingCrashRecoverySpec extends SparkSpec {
     assert(ok.delete(), s"fixture: could not remove $ok")
   }
 
+  /** Poison version `id` of each grain in `grains` with version 0's
+    * counters ×1000.
+    */
+  private def poison(root: String, id: Long, grains: Seq[String]): Unit =
+    grains.foreach { g =>
+      injectPartial(s"$root/$g/batch=$id",
+        spark.read.parquet(s"$root/$g/batch=0")
+          .withColumn("games", col("games") * 1000))
+    }
+
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  test("StreamingAgg: recovery after a crash mid-write of batch 1 reads " +
-       "version 0, replay rewrites identically, batch 2 skips the " +
-       "poisoned dir") {
-    val root = Files.createTempDirectory("graft-crash-agg").toString
-    def agg(df: DataFrame): DataFrame =
-      df.groupBy(col("k")).agg(count(lit(1)).as("n_rows"),
-                               sum(col("v")).as("sum_v"))
-    val b = Seq(Seq((1L, 10L), (2L, 7L)), Seq((1L, 1L), (3L, 30L)),
-                Seq((2L, 100L))).map(_.toDF("k", "v"))
-    StreamingAgg.mergeBatch(agg(b(0)), 0L, "k", root)
-    // crash mid-write of batch 1: poisoned = v0 counters ×1000, no _SUCCESS
-    injectPartial(s"$root/batch=1",
-      agg(b(0)).withColumn("sum_v", col("sum_v") * 1000))
-    // recovery: batch 1 replays under its own id
-    StreamingAgg.mergeBatch(agg(b(1)), 1L, "k", root)
-    val expect01 = sortedRows(agg(b(0).unionByName(b(1))))
-    assert(sortedRows(spark.read.parquet(s"$root/batch=1")) === expect01,
-      "recovery must merge batch 1 onto version 0, not the poisoned dir")
-    // second replay rewrites byte-identically
-    StreamingAgg.mergeBatch(agg(b(1)), 1L, "k", root)
-    assert(sortedRows(spark.read.parquet(s"$root/batch=1")) === expect01)
-    // a LATER poisoned-uncommitted dir between versions: batch 2 at a
-    // fresh root sees committed 0, poisoned 1 (never recovered), and
-    // must merge onto 0 — the _SUCCESS gate, not the id filter
-    val root2 = Files.createTempDirectory("graft-crash-agg2").toString
-    StreamingAgg.mergeBatch(agg(b(0)), 0L, "k", root2)
-    injectPartial(s"$root2/batch=1",
-      agg(b(1)).withColumn("sum_v", col("sum_v") * 1000))
-    StreamingAgg.mergeBatch(agg(b(2)), 2L, "k", root2)
-    assert(sortedRows(spark.read.parquet(s"$root2/batch=2")) ===
-      sortedRows(agg(b(0).unionByName(b(2)))),
-      "batch 2 must skip the uncommitted batch=1 dir")
-  }
-
-  test("StreamingSketch: crash mid-write of batch 1 — recovery merges " +
-       "onto version 0 and equals the direct union sketch") {
-    val root = Files.createTempDirectory("graft-crash-sketch").toString
-    val (d, w) = (3, 16)
-    val b0 = (1 to 40).map(i => (i % 7).toLong).toDF("k")
-    val b1 = (1 to 30).map(i => (i % 5).toLong).toDF("k")
-    StreamingSketch.mergeBatch(b0, 0L, "k", d, w, root)
-    injectPartial(s"$root/batch=1",
-      CountMin.sketch(b0, "k", d, w).withColumn("cnt", col("cnt") * 1000))
-    StreamingSketch.mergeBatch(b1, 1L, "k", d, w, root)
-    val expect = sortedRows(CountMin.sketch(b0.unionByName(b1), "k", d, w))
-    assert(sortedRows(spark.read.parquet(s"$root/batch=1")) === expect,
-      "recovered sketch must equal the direct sketch of all rows")
-    StreamingSketch.mergeBatch(b1, 1L, "k", d, w, root)
-    assert(sortedRows(spark.read.parquet(s"$root/batch=1")) === expect)
-  }
-
-  test("StreamingCuration: crash mid-write of batch 1 across all three " +
-       "state tables — recovered ledger equals the union batch DAG") {
-    val root = Files.createTempDirectory("graft-crash-cur").toString
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "lang", "source", "text")
-    val parts = (0 until 2).map(k => docs.filter(col("doc_id") % 2 === k))
-    StreamingCuration.curationBatch(parts(0), root, 0L)
-    // poison all three per-batch tables the way a mid-batch crash can:
-    // stage3 got further than the ledgers (writes happen in that order)
-    injectPartial(s"$root/stage3/batch=1",
-      spark.read.parquet(s"$root/stage3/batch=0").limit(1))
-    injectPartial(s"$root/ledger03/batch=1",
-      spark.read.parquet(s"$root/ledger03/batch=0")
-        .withColumn("rows_out", col("rows_out") * 1000))
-    val ledger = StreamingCuration.curationBatch(parts(1), root, 1L)
-    def rows(df: DataFrame) = df.orderBy("stage_idx").collect()
-      .map(_.toString).toSeq
-    val expected = rows(CurationQueries.curationDagLedger(spark, docs))
-    assert(rows(ledger) === expected,
-      "recovered ledger must equal the batch DAG over all docs")
-    val replay = StreamingCuration.curationBatch(parts(1), root, 1L)
-    assert(rows(replay) === expected)
+  /** All six visuals read from the state at `root` equal the batch
+    * [[Dashboard]] over `union`.
+    */
+  private def assertVisuals(union: DataFrame, root: String,
+                            label: String): Unit = {
+    val b = new Dashboard(union)
+    val ctx = FilterContext.empty
+    try Seq(
+      "cards" -> (b.cards(ctx), StreamingDashboard.cards(spark, root)),
+      "matrix" -> (b.winRateByBucketAndColor(ctx),
+        StreamingDashboard.winRateByBucketAndColor(spark, root)),
+      "bands" -> (b.winRateByOpponentBucket(ctx),
+        StreamingDashboard.winRateByOpponentBucket(spark, root)),
+      "opponents" -> (b.topOpponents(10, ctx),
+        StreamingDashboard.topOpponents(spark, root, 10)),
+      "openings" -> (b.topOpenings(5, ctx),
+        StreamingDashboard.topOpenings(spark, root, 5)),
+      "rolling" -> (b.rollingWinRate(spark, 12, ctx),
+        StreamingDashboard.rollingWinRate(spark, root, 12))
+    ).foreach { case (name, (batch, stream)) =>
+      assert(sortedRows(stream) === sortedRows(batch), s"$label/$name")
+    } finally b.close()
   }
 
   test("StreamingDashboard: crash mid-write of batch 1 across grains — " +
        "recovered visuals equal the batch Dashboard") {
-    val root = Files.createTempDirectory("graft-crash-dash").toString
     val fact = ChessQueries.fixtureFact(spark, "/root/testdata/sf0.001")
     val parts = (0 until 2).map(k =>
       fact.filter(pmod(col("white_rating"), lit(2L)) === k))
+    val union = parts(0).unionByName(parts(1))
+    val grains = StreamingDashboard.Grains.map(_._1)
+
+    val root = Files.createTempDirectory("graft-crash-dash").toString
     StreamingDashboard.dashboardBatch(parts(0), root, 0L)
-    // poison a subset of grains (a crash lands mid-loop): counters ×1000
-    Seq("global", "opponent", "daily").foreach { g =>
-      injectPartial(s"$root/$g/batch=1",
-        spark.read.parquet(s"$root/$g/batch=0")
-          .withColumn("games", col("games") * 1000))
-    }
+    // poison a subset of grains (a crash lands mid-loop)
+    poison(root, 1L, Seq("global", "opponent", "daily"))
     StreamingDashboard.dashboardBatch(parts(1), root, 1L)
-    val b = new Dashboard(parts(0).unionByName(parts(1)))
-    assert(sortedRows(StreamingDashboard.cards(spark, root)) ===
-           sortedRows(b.cards(FilterContext.empty)))
-    assert(sortedRows(StreamingDashboard.topOpponents(spark, root, 10)) ===
-           sortedRows(b.topOpponents(10)))
-    assert(sortedRows(StreamingDashboard.rollingWinRate(spark, root, 12)) ===
-           sortedRows(b.rollingWinRate(spark, 12)))
+    assertVisuals(union, root, "recovered")
     // replay rewrites every grain identically
-    val before = StreamingDashboard.Grains.map { case (g, _) =>
+    val before = grains.map { g =>
       g -> sortedRows(spark.read.parquet(s"$root/$g/batch=1"))
     }
     StreamingDashboard.dashboardBatch(parts(1), root, 1L)
@@ -148,37 +93,17 @@ class StreamingCrashRecoverySpec extends SparkSpec {
       assert(sortedRows(spark.read.parquet(s"$root/$g/batch=1")) === rows,
              s"replay must rewrite $g identically")
     }
-  }
 
-  test("StreamingDedup: replay of a committed append is a no-op and " +
-       "crash-mid-append staging is invisible to readers") {
-    val root = Files.createTempDirectory("graft-crash-dedup").toString
-    val corpus = s"$root/corpus"
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select("doc_id", "text").limit(40)
-    val n0 = StreamingDedup.dedupAppendBatch(docs, corpus,
-      minExpectedCorpusKeys = 1000L)
-    assert(n0 > 0)
-    val before = sortedRows(spark.read.parquet(corpus))
-    // crash AFTER append, BEFORE checkpoint commit: the source replays
-    // the same batch; every row now dedups against the corpus
-    val n1 = StreamingDedup.dedupAppendBatch(docs, corpus,
-      minExpectedCorpusKeys = 1000L)
-    assert(n1 === 0L, "replayed batch must append nothing")
-    assert(sortedRows(spark.read.parquet(corpus)) === before)
-    // crash MID-append leaves only UNCOMMITTED task-attempt staging
-    // (`_temporary/<job>/_temporary/<attempt>/part-…` — a task dir only
-    // moves up a level at task COMMIT), which readers and the next
-    // batch's corpus scan ignore, and whose job-level cleanup removes
-    val tmp = new java.io.File(
-      s"$corpus/_temporary/0/_temporary/attempt_000_crashed_m_000000_0")
-    assert(tmp.mkdirs())
-    java.nio.file.Files.write(
-      tmp.toPath.resolve("part-stray.parquet"), Array[Byte](9, 9, 9))
-    assert(sortedRows(spark.read.parquet(corpus)) === before,
-      "_temporary staging must be invisible")
-    val n2 = StreamingDedup.dedupAppendBatch(docs, corpus,
-      minExpectedCorpusKeys = 1000L)
-    assert(n2 === 0L)
+    // a batch 1 that never recovers: batch 2 must merge onto committed
+    // version 0 past the uncommitted batch=1 dir of every grain
+    val root2 = Files.createTempDirectory("graft-crash-dash2").toString
+    StreamingDashboard.dashboardBatch(parts(0), root2, 0L)
+    poison(root2, 1L, grains)
+    StreamingDashboard.dashboardBatch(parts(1), root2, 2L)
+    assertVisuals(union, root2, "batch 2 skips uncommitted batch=1")
+    // a partially written version above every committed one is
+    // invisible to the readers
+    poison(root2, 99L, grains)
+    assertVisuals(union, root2, "readers skip uncommitted batch=99")
   }
 }
