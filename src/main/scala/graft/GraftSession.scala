@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.LevenshteinThresholdRewrite
+
 /** Session factory for the graft engine.
   *
   * Local defaults target the test harness (`local[32]`, one JVM); the same
@@ -13,6 +15,10 @@ import org.apache.spark.sql.SparkSession
   * The JVM-wide cache of compiled generated classes is sized to the
   * engine's working set ([[CodegenCacheEntries]]), so a long-lived session
   * compiles each class once instead of recompiling it on every pass.
+  *
+  * Every session carries the [[graft.plans.LevenshteinThresholdRewrite]]
+  * optimizer rule, an exact expression equivalence, so a query's plan
+  * does not depend on which queries ran before it in the session.
   */
 object GraftSession {
 
@@ -72,4 +78,5 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .withExtensions(_.injectOptimizerRule(_ => LevenshteinThresholdRewrite))
 }

@@ -1831,20 +1831,17 @@ object Dedup {
     * Cost on top of the pairs: the CC rounds + one per-component
     * struct-max argmax + two keyed joins. Ids must be numeric (the
     * tie-break negates them — same contract as labelPropagation).
-    * Second return = the CC labels' release handle
-    * ([[applyDedupReleasable]] discipline).
     */
-  def electKeepersReleasable(docs: DataFrame, idCol: String,
-                             qualityCol: String, pairs: DataFrame,
-                             aCol: String = "doc_a", bCol: String = "doc_b")
-      : (DataFrame, DataFrame) = {
+  def electKeepers(docs: DataFrame, idCol: String, qualityCol: String,
+                   pairs: DataFrame, aCol: String = "doc_a",
+                   bCol: String = "doc_b"): DataFrame = {
     val badIds = docs
       .filter(col(idCol).isNull || col(idCol) < 0).limit(1).count()
     require(badIds == 0,
       "electKeepers requires non-negative non-null numeric ids " +
         "(the deterministic tie-break negates them)")
-    val labels = GraphOps.connectedComponents(pairs, aCol, bCol)
-    val cc = labels.toDF(idCol, "__comp")
+    val cc = GraphOps.connectedComponents(pairs, aCol, bCol)
+      .toDF(idCol, "__comp")
     val withComp = docs
       .select(col(idCol), col(qualityCol).cast("long").as("__q"))
       .join(cc, Seq(idCol), "left")
@@ -1853,18 +1850,11 @@ object Dedup {
       .groupBy(col("component"))
       .agg(max(struct(col("__q"), (-col(idCol)).as("__neg"))).as("__top"))
       .select(col("component"), (-col("__top.__neg")).as("keeper_id"))
-    val out = withComp
+    withComp
       .join(keepers, Seq("component"))
       .select(col(idCol), col("component"), col("keeper_id"),
               (col(idCol) === col("keeper_id")).as("kept"))
-    (out, labels)
   }
-
-  /** [[electKeepersReleasable]] for one-shot batch callers. */
-  def electKeepers(docs: DataFrame, idCol: String, qualityCol: String,
-                   pairs: DataFrame, aCol: String = "doc_a",
-                   bCol: String = "doc_b"): DataFrame =
-    electKeepersReleasable(docs, idCol, qualityCol, pairs, aCol, bCol)._1
 
   /** 64-bit SimHash over word occurrences: bit b of the signature is set
     * iff Σ_words (2·bit_b(h64(w)) − 1) > 0, h64 = first 8 md5 bytes (hi

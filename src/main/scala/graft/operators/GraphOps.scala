@@ -1105,27 +1105,6 @@ object GraphOps {
     dist
   }
 
-  /** PER-SEED bounded BFS: distances keyed by (seed, node) — unlike
-    * [[bfsHops]], which merges the seed set into one frontier, each
-    * seed keeps its own distance map, so per-seed radius/eccentricity
-    * and reach statistics fall out of a single aggregate over the
-    * result. After round i, `hops` is the exact minimum hop count
-    * over paths of ≤ i edges from THAT seed (pairs with no such path
-    * are absent); the round cap is part of the semantics, so a SQL
-    * oracle unrolls the identical recurrence.
-    *
-    * Scale: state is O(seeds × reached nodes) — linear in the seed
-    * count, which is the knob. Per round ONE keyed join on `src`
-    * (the relaxation) + ONE map-combined min aggregate on
-    * (seed, node); the seed column rides the shuffle for free as part
-    * of the grouping key. For |seeds| ≫ tens, prefer sketch-based
-    * all-pairs methods (HyperANF-style) — this operator is the exact
-    * small-seed-panel tool (contamination radius, hub eccentricity).
-    *
-    * RELEASE CONTRACT: identical to [[bfsHops]] — the returned frame
-    * is the final round's localCheckpoint and doubles as the release
-    * handle.
-    */
   /** SHORTEST-PATH COUNTS from one seed — the forward (σ) phase of
     * Brandes' betweenness algorithm, level-synchronous: after round i
     * the settled set holds (node, dist, sigma) for every node within
@@ -1198,6 +1177,27 @@ object GraphOps {
     settled
   }
 
+  /** PER-SEED bounded BFS: distances keyed by (seed, node) — unlike
+    * [[bfsHops]], which merges the seed set into one frontier, each
+    * seed keeps its own distance map, so per-seed radius/eccentricity
+    * and reach statistics fall out of a single aggregate over the
+    * result. After round i, `hops` is the exact minimum hop count
+    * over paths of ≤ i edges from THAT seed (pairs with no such path
+    * are absent); the round cap is part of the semantics, so a SQL
+    * oracle unrolls the identical recurrence.
+    *
+    * Scale: state is O(seeds × reached nodes) — linear in the seed
+    * count, which is the knob. Per round ONE keyed join on `src`
+    * (the relaxation) + ONE map-combined min aggregate on
+    * (seed, node); the seed column rides the shuffle for free as part
+    * of the grouping key. For |seeds| ≫ tens, prefer sketch-based
+    * all-pairs methods (HyperANF-style) — this operator is the exact
+    * small-seed-panel tool (contamination radius, hub eccentricity).
+    *
+    * RELEASE CONTRACT: identical to [[bfsHops]] — the returned frame
+    * is the final round's localCheckpoint and doubles as the release
+    * handle.
+    */
   def perSeedHops(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String,
                   maxHops: Int): DataFrame = {

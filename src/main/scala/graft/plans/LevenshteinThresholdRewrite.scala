@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -29,24 +28,18 @@ import org.apache.spark.sql.types.IntegerType
   * survives), and null inputs yield null in both forms, making the
   * comparison null in both plans.
   *
-  * Always ON once enabled (pure expression equivalence — there is no
-  * knob to guess) and idempotent: the rewritten node carries a threshold, which the
-  * pattern excludes. Degenerate literals (`<= −1`, `> −1`, `>= 0`,
-  * `= −1`, …) are left untouched: their constant-valued equivalents
-  * are NOT plain `true`/`false` — a null input must still yield null
-  * — and a negative threshold would change the expression's error
-  * behavior rather than its value, so the rule only fires where the
-  * threshold form is a strict drop-in.
+  * Part of every graft session ([[graft.GraftSession.configure]]
+  * injects it; a pure expression equivalence, so there is no knob to
+  * guess), so a query is planned the same whether it runs alone or
+  * after any other. Idempotent: the rewritten node carries a
+  * threshold, which the pattern excludes. Degenerate literals
+  * (`<= −1`, `> −1`, `>= 0`, `= −1`, …) are left untouched: their
+  * constant-valued equivalents are NOT plain `true`/`false` — a null
+  * input must still yield null — and a negative threshold would change
+  * the expression's error behavior rather than its value, so the rule
+  * only fires where the threshold form is a strict drop-in.
   */
 object LevenshteinThresholdRewrite extends Rule[LogicalPlan] {
-
-  /** Adds the rule to the session's extra optimizations, once; it
-    * stays on for the rest of the session.
-    */
-  def enable(session: SparkSession): Unit =
-    if (!session.experimental.extraOptimizations.contains(this))
-      session.experimental.extraOptimizations =
-        session.experimental.extraOptimizations :+ this
 
   private object IntLit {
     def unapply(e: Expression): Option[Int] = e match {

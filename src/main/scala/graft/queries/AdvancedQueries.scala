@@ -1211,21 +1211,18 @@ object AdvancedQueries {
   /** q235 — the NAIVE fuzzy join, auto-repaired by the optimizer:
     * the same quarter histogram as q226, but written the way a user
     * naturally writes it — a bare noun-blocked join with
-    * `levenshtein(a, b) <= 2` as a plain comparison — with
-    * [[graft.plans.LevenshteinThresholdRewrite]] enabled, which
-    * rewrites the predicate to the banded threshold kernel
+    * `levenshtein(a, b) <= 2` as a plain comparison — and
+    * [[graft.plans.LevenshteinThresholdRewrite]], part of every graft
+    * session, rewrites the predicate to the banded threshold kernel
     * (`lev(a, b, 2) >= 0`, O(k·len) with early exit instead of the
     * full O(len²) DP) in the optimizer, not in the query text. Three
     * queries, one oracle: q193 (hand-banded), q226 (segment
     * signatures), and q235 (naive text + rule) must all hash to the
     * same answer — the rule's exactness is oracle-gated on real
     * data, and `LevenshteinThresholdRewriteSpec` pins the rewrite
-    * itself (incl. nulls, mirrors, idempotence). The rule stays
-    * enabled for the session afterwards — it is a pure expression
-    * equivalence with no knob.
+    * itself (incl. nulls, mirrors, idempotence).
     */
   def q235LevRewrite(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.LevenshteinThresholdRewrite.enable(s)
     val p = Tables.part(s, dir)
       .filter(col("p_partkey") % 4 === 0)
       .select(col("p_partkey").as("pk"), col("p_name").as("nm"),

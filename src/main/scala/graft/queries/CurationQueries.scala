@@ -1895,42 +1895,25 @@ object CurationQueries {
   def q269CurationDag(s: SparkSession, dir: String): DataFrame =
     curationDagLedger(s, Tables.documents(s, dir))
 
-  /** The q269 DAG over an explicit document frame — q269's body. Splits
-    * as [[curationStages0to3]] (per-document maps and filters) +
-    * [[curationStages4to10]] (corpus-global: keeper election,
-    * calibration, DSIR and the epoch mix all read the whole
-    * population).
+  /** The q269 DAG over an explicit document frame — q269's body.
+    * Stages 0–3 (source, HTML main-content, NFC, quality rules) are
+    * per-document maps and filters; stages 4–10 (minhash family dedup,
+    * substring cut, calibrated lang-id, DSIR, epoch mix, packing,
+    * sharding) are corpus-global: keeper election, calibration, DSIR
+    * and the epoch mix all read the whole population. Clears the job
+    * description on exit.
     */
   private[graft] def curationDagLedger(s: SparkSession,
                                        docs: DataFrame): DataFrame = {
+    import graft.operators.{Classification, Dedup, Dsir, Html,
+      Intervals, Isotonic, Partitioning, PrefixSum, Sharding}
+    import org.apache.spark.sql.GraftColumns
     val sEnc = s
     import sEnc.implicits._
-    val (d3, led03) = curationStages0to3(s, docs)
-    val n3 = led03.last._4
-    val led410 = curationStages4to10(s, d3, n3) // releases d3 (stage 4)
-    (led03 ++ led410)
-      .toDF("stage_idx", "stage", "rows_in", "rows_out", "tokens_out")
-      .orderBy("stage_idx")
-  }
-
-  private def curationToksCol =
-    size(split(col("text"), " ")).cast("long")
-
-  /** Stages 0–3 (source, HTML main-content, NFC, quality rules) — all
-    * PER-DOCUMENT maps/filters. Returns the stage-3 survivor frame
-    * (CHECKPOINTED — ownership passes to [[curationStages4to10]], or
-    * the caller releases it) plus ledger rows 0–3. Leaves the last
-    * stage's job-description label set; the stage-4+ half (or the
-    * caller) overwrites/clears it.
-    */
-  private[graft] def curationStages0to3(s: SparkSession, docs: DataFrame)
-      : (DataFrame, Seq[(Long, String, Long, Long, Long)]) = {
-    import graft.operators.{Html, Partitioning}
-    import org.apache.spark.sql.GraftColumns
     val led =
       scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long,
                                                   Long, Long)]
-    val toksCol = curationToksCol
+    val toksCol = size(split(col("text"), " ")).cast("long")
     // ONE job per stage, full stop (r16): each stage's frame rides a
     // LAZY checkpoint and this ledger aggregate IS the materializing
     // action — the stage's final pass computes, persists, and counts
@@ -1999,37 +1982,6 @@ object CurationQueries {
     val (n3, t3) = countToks(d3)
     led += ((3L, "quality_rules", n2, n3, t3))
     GraftColumns.unpersistCheckpoint(d2)
-    (d3, led.toSeq)
-  }
-
-  /** Stages 4–10 (minhash family dedup, substring cut, calibrated
-    * lang-id, DSIR, epoch mix, packing, sharding) — all CORPUS-GLOBAL.
-    * Takes OWNERSHIP of `d3`'s graft checkpoint (released as soon as
-    * stage 4 materializes — the O(1)-storage discipline; a no-op when
-    * `d3` carries none). `n3` is the
-    * stage-3 survivor count (stage 4's rows_in). Clears the job
-    * description on exit.
-    */
-  private[graft] def curationStages4to10(s: SparkSession, d3: DataFrame,
-                                         n3: Long)
-      : Seq[(Long, String, Long, Long, Long)] = {
-    import graft.operators.{Classification, Dedup, Dsir,
-      Intervals, Isotonic, PrefixSum, Sharding}
-    import org.apache.spark.sql.GraftColumns
-    val led =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long,
-                                                  Long, Long)]
-    val toksCol = curationToksCol
-    // ONE job per stage: the ledger aggregate doubles as the lazy
-    // checkpoint's materializing action — the [[curationStages0to3]]
-    // discipline
-    def countToks(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-                     coalesce(sum(toksCol), lit(0L))).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    def mark(n: String): Unit =
-      s.sparkContext.setJobDescription(s"q269:$n")
 
     // 4 — MinHash family dedup, component-min keeper. BEFORE the
     // substring cut: cutting corpus-duplicated spans first strips the
@@ -2150,8 +2102,6 @@ object CurationQueries {
       rem -= e * t
       (src, e)
     }.filter(_._2 >= 1L)
-    val sEnc = s
-    import sEnc.implicits._
     val d8 = d7.join(broadcast(epochRows.toSeq.toDF("source", "epochs")),
                      Seq("source"))
       .graftCheckpointLazy()
@@ -2198,6 +2148,8 @@ object CurationQueries {
     s.sparkContext.setJobDescription(null)
 
     led.toSeq
+      .toDF("stage_idx", "stage", "rows_in", "rows_out", "tokens_out")
+      .orderBy("stage_idx")
   }
 
   /** q227 — SCORE–LENGTH BIAS AUDIT, the documented failure mode of

@@ -108,11 +108,11 @@ final class Dashboard(gamesFact: DataFrame) extends AutoCloseable {
   *
   * Both dashboards aggregate the counters of all six grains in one pass,
   * [[allCounters]], and read one grain of it with [[grain]]: the batch
-  * dashboard once per page context, the streaming dashboard once per
-  * micro-batch (whose grains it then merges into per-grain state, handing
-  * the latest committed state to the same readers). Each reader below
-  * takes the counters of one grain (a frame with the grain's dims plus
-  * `games`, `wins`, `losses`, `draws`).
+  * dashboard once per page context; the streaming dashboard once per
+  * micro-batch, which it merges ([[mergeCounters]]) into one state
+  * version of the same long format, the frame its readers take their
+  * grains from. Each reader below takes the counters of one grain (a
+  * frame with the grain's dims plus `games`, `wins`, `losses`, `draws`).
   */
 object Dashboard {
   import ChessMeasures.{drawExpr, lossExpr, winExpr}
@@ -134,7 +134,7 @@ object Dashboard {
   private val AllDims: Seq[String] = Grains.flatMap(_._2).distinct
 
   /** The additive counters every grain carries. */
-  private[graft] val Counters: Seq[String] = Seq("games", "wins", "losses", "draws")
+  private val Counters: Seq[String] = Seq("games", "wins", "losses", "draws")
 
   /** The counters of every grain over a DERIVED fact, in one aggregate
     * (`GROUPING SETS`, one set per grain): a long-format frame of
@@ -156,6 +156,16 @@ object Dashboard {
            sum(winExpr).as("wins"), sum(lossExpr).as("losses"),
            sum(drawExpr).as("draws"))
       .select(name.as("grain") +: (AllDims ++ Counters).map(col): _*)
+  }
+
+  /** The counters of two [[allCounters]] frames' games together, in the
+    * same format: the counters are additive, so this sums them per key.
+    * Keys group within their `grain`, so a null key stays its grain's.
+    */
+  def mergeCounters(a: DataFrame, b: DataFrame): DataFrame = {
+    val sums = Counters.map(c => sum(col(c)).as(c))
+    a.unionByName(b).groupBy(("grain" +: AllDims).map(col): _*)
+      .agg(sums.head, sums.tail: _*)
   }
 
   /** One grain of an [[allCounters]] frame: the grain's dims plus the

@@ -6,20 +6,23 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** [[LevenshteinThresholdRewrite]] — the naive comparison must become
-  * the threshold kernel in the optimized plan, with identical results
-  * (including nulls and the literal-first mirrors), and already-
-  * thresholded or negative-literal forms must pass through untouched.
+/** [[LevenshteinThresholdRewrite]] — every graft session carries the
+  * rule, so the naive comparison must become the threshold kernel in the
+  * optimized plan, with identical results (including nulls and the
+  * literal-first mirrors) to the naive plan that excluding the rule
+  * gives, and already-thresholded or negative-literal forms must pass
+  * through untouched.
   */
 class LevenshteinThresholdRewriteSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRule[A](f: => A): A = {
-    LevenshteinThresholdRewrite.enable(spark)
+  private val Excluded = "spark.sql.optimizer.excludedRules"
+
+  /** Plans `f`'s frames without the rule: the naive baseline. */
+  private def withoutRule[A](f: => A): A = {
+    spark.conf.set(Excluded, LevenshteinThresholdRewrite.ruleName)
     try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_ == LevenshteinThresholdRewrite)
+    finally spark.conf.unset(Excluded)
   }
 
   // a real (parquet) source: over a LocalRelation, pushdown +
@@ -69,14 +72,14 @@ class LevenshteinThresholdRewriteSpec extends SparkSpec {
       ("levenshtein(x, y) >= 2" -> Set(3L, 4L)),
       ("1 < levenshtein(x, y)"  -> Set(3L, 4L)),
       ("2 <= levenshtein(x, y)" -> Set(3L, 4L)))
-    for ((pred, expected) <- cases) withRule {
+    for ((pred, expected) <- cases) {
       val df = fixture.filter(expr(pred)).select("id")
       assert(thresholded(df).nonEmpty, s"$pred must rewrite")
       assert(bare(df).isEmpty, s"$pred must leave no bare levenshtein")
       assert(df.as[Long].collect().toSet === expected, pred)
     }
     // identical rows WITHOUT the rule (the equivalence itself)
-    for ((pred, expected) <- cases) {
+    for ((pred, expected) <- cases) withoutRule {
       val df = fixture.filter(expr(pred)).select("id")
       assert(bare(df).nonEmpty, s"$pred stays bare without the rule")
       assert(df.as[Long].collect().toSet === expected, pred)
@@ -84,33 +87,27 @@ class LevenshteinThresholdRewriteSpec extends SparkSpec {
   }
 
   test("rewrite applies inside join conditions") {
-    withRule {
-      val a = fixture.select(col("id").as("ia"), col("x"))
-      val b = fixture.select(col("id").as("ib"), col("y"))
-      val j = a.join(b, expr("levenshtein(x, y) <= 1") &&
-                        col("ia") =!= col("ib"))
-      assert(thresholded(j).nonEmpty, "join condition must rewrite")
-      assert(j.count() > 0)
-    }
+    val a = fixture.select(col("id").as("ia"), col("x"))
+    val b = fixture.select(col("id").as("ib"), col("y"))
+    val j = a.join(b, expr("levenshtein(x, y) <= 1") &&
+                      col("ia") =!= col("ib"))
+    assert(thresholded(j).nonEmpty, "join condition must rewrite")
+    assert(j.count() > 0)
   }
 
   test("already-thresholded and negative-literal forms pass through") {
-    withRule {
-      val t = fixture.filter(expr("levenshtein(x, y, 1) >= 0"))
-      assert(thresholded(t).size === 1 && bare(t).isEmpty,
-        "already-thresholded is untouched (idempotence)")
-      // k < 0: constant behavior differs (threshold must be >= 0), so
-      // the rule must not touch it; Catalyst folds it to empty anyway
-      val n = fixture.filter(expr("levenshtein(x, y) <= -1"))
-      assert(n.count() === 0)
-      assert(thresholded(n).isEmpty, "negative k must not rewrite")
-    }
+    val t = fixture.filter(expr("levenshtein(x, y, 1) >= 0"))
+    assert(thresholded(t).size === 1 && bare(t).isEmpty,
+      "already-thresholded is untouched (idempotence)")
+    // k < 0: constant behavior differs (threshold must be >= 0), so
+    // the rule must not touch it; Catalyst folds it to empty anyway
+    val n = fixture.filter(expr("levenshtein(x, y) <= -1"))
+    assert(n.count() === 0)
+    assert(thresholded(n).isEmpty, "negative k must not rewrite")
   }
 
   test("non-comparison uses are untouched") {
-    withRule {
-      val p = fixture.select(expr("levenshtein(x, y)").as("d"))
-      assert(bare(p).size === 1 && thresholded(p).isEmpty)
-    }
+    val p = fixture.select(expr("levenshtein(x, y)").as("d"))
+    assert(bare(p).size === 1 && thresholded(p).isEmpty)
   }
 }

@@ -11,37 +11,33 @@ import graft.semantic.{Dashboard, FilterContext}
 
 /** Fault-injection drive of [[StreamingDashboard]]'s versioned state
   * (r14 verdict #5): batch 0 commits, then a CRASH MID-WRITE of batch 1
-  * is simulated — its version dirs exist with plausible-but-WRONG
+  * is simulated — its version dir exists with plausible-but-WRONG
   * parquet content and NO `_SUCCESS` (exactly what a killed executor
   * leaves). Recovery = the engine replaying batch 1 under its original
   * id must read the prior COMMITTED version (the poisoned counters are
   * inflated ×1000, so reading through the gate would be caught, not
   * lucked past), produce the batch-recompute visuals, and a second
-  * replay must rewrite every grain identically. A later batch (id 2)
+  * replay must rewrite the version identically. A later batch (id 2)
   * must ALSO skip an uncommitted id-1 dir, and the readers must skip an
   * uncommitted dir above every committed one — the cases the id filter
   * alone cannot catch, only the `_SUCCESS` gate.
   */
 class StreamingCrashRecoverySpec extends SparkSpec {
 
-  /** Simulate a crash mid-write of version `id`: plausible parquet
-    * content, no `_SUCCESS`.
+  /** Simulate a crash mid-write of version `id`: version 0's rows of
+    * `grains` (all six by default) with their games ×1000, written as
+    * `<root>/batch=<id>` with no `_SUCCESS`.
     */
-  private def injectPartial(dir: String, poisoned: DataFrame): Unit = {
-    poisoned.write.mode("overwrite").parquet(dir)
+  private def poison(root: String, id: Long,
+                     grains: Seq[String] = Dashboard.Grains.map(_._1)): Unit = {
+    val dir = s"$root/batch=$id"
+    spark.read.parquet(s"$root/batch=0")
+      .filter(col("grain").isin(grains: _*))
+      .withColumn("games", col("games") * 1000)
+      .write.mode("overwrite").parquet(dir)
     val ok = new java.io.File(dir, "_SUCCESS")
     assert(ok.delete(), s"fixture: could not remove $ok")
   }
-
-  /** Poison version `id` of each grain in `grains` with version 0's
-    * counters ×1000.
-    */
-  private def poison(root: String, id: Long, grains: Seq[String]): Unit =
-    grains.foreach { g =>
-      injectPartial(s"$root/$g/batch=$id",
-        spark.read.parquet(s"$root/$g/batch=0")
-          .withColumn("games", col("games") * 1000))
-    }
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -76,34 +72,29 @@ class StreamingCrashRecoverySpec extends SparkSpec {
     val parts = (0 until 2).map(k =>
       fact.filter(pmod(col("white_rating"), lit(2L)) === k))
     val union = parts(0).unionByName(parts(1))
-    val grains = StreamingDashboard.Grains.map(_._1)
 
     val root = Files.createTempDirectory("graft-crash-dash").toString
     StreamingDashboard.dashboardBatch(parts(0), root, 0L)
-    // poison a subset of grains (a crash lands mid-loop)
+    // a crash mid-write leaves some of the version's rows
     poison(root, 1L, Seq("global", "opponent", "daily"))
     StreamingDashboard.dashboardBatch(parts(1), root, 1L)
     assertVisuals(union, root, "recovered")
-    // replay rewrites every grain identically
-    val before = grains.map { g =>
-      g -> sortedRows(spark.read.parquet(s"$root/$g/batch=1"))
-    }
+    // replay rewrites the version identically
+    val before = sortedRows(spark.read.parquet(s"$root/batch=1"))
     StreamingDashboard.dashboardBatch(parts(1), root, 1L)
-    before.foreach { case (g, rows) =>
-      assert(sortedRows(spark.read.parquet(s"$root/$g/batch=1")) === rows,
-             s"replay must rewrite $g identically")
-    }
+    assert(sortedRows(spark.read.parquet(s"$root/batch=1")) === before,
+           "replay must rewrite the version identically")
 
     // a batch 1 that never recovers: batch 2 must merge onto committed
-    // version 0 past the uncommitted batch=1 dir of every grain
+    // version 0 past the uncommitted batch=1 dir
     val root2 = Files.createTempDirectory("graft-crash-dash2").toString
     StreamingDashboard.dashboardBatch(parts(0), root2, 0L)
-    poison(root2, 1L, grains)
+    poison(root2, 1L)
     StreamingDashboard.dashboardBatch(parts(1), root2, 2L)
     assertVisuals(union, root2, "batch 2 skips uncommitted batch=1")
     // a partially written version above every committed one is
     // invisible to the readers
-    poison(root2, 99L, grains)
+    poison(root2, 99L)
     assertVisuals(union, root2, "readers skip uncommitted batch=99")
   }
 }

@@ -73,22 +73,21 @@ class StreamingDashboardSpec extends SparkSpec {
       union = if (union == null) b else union.unionByName(b)
       assertVisualsEqual(union, root, FilterContext.empty, s"batch$k")
     }
-    // crash replay of the LAST batch (same id, same input): versions
-    // rewrite from the same (predecessor, partials) pair — state and
+    // one version per batch, holding all six grains: no per-grain dirs
+    assert(new java.io.File(root).list().toSeq.sorted ===
+             Seq("batch=0", "batch=1", "batch=2"),
+           "the state root must hold exactly one version dir per batch")
+    // crash replay of the LAST batch (same id, same input): the version
+    // rewrites from the same (predecessor, partials) pair — state and
     // visuals must come back identical
-    val grainBefore = StreamingDashboard.Grains.map { case (g, _) =>
-      g -> rows(spark.read.parquet(s"$root/$g/batch=2")
-        .orderBy(spark.read.parquet(s"$root/$g/batch=2").columns
-          .map(col): _*))
+    def version2: Seq[String] = {
+      val v = spark.read.parquet(s"$root/batch=2")
+      rows(v.orderBy(v.columns.toSeq.map(col): _*))
     }
+    val before = version2
     StreamingDashboard.dashboardBatch(parts(2), root, 2L)
     assertVisualsEqual(union, root, FilterContext.empty, "replay")
-    grainBefore.foreach { case (g, before) =>
-      val after = rows(spark.read.parquet(s"$root/$g/batch=2")
-        .orderBy(spark.read.parquet(s"$root/$g/batch=2").columns
-          .map(col): _*))
-      assert(after === before, s"replay must not change $g state")
-    }
+    assert(version2 === before, "replay must not change the state")
   }
 
   test("a fixed slicer FilterContext applied per batch equals the batch " +
