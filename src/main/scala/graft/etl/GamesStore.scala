@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -121,44 +121,38 @@ final class GamesStore(root: String) extends Serializable {
     * already exists (cross-run dedup) and duplicates within the batch
     * itself (intra-batch dedup), keeping rows with empty urls — the
     * reference appends those untracked (`fetch_and_post.py:362-370`).
-    * Of a batch's rows sharing a `game_url`, the first by `firstBy` lands.
-    * Returns the number of rows appended per `username`, read from the
-    * staged parquet.
+    * Of a batch's rows sharing a `game_url`, the first by `firstBy`
+    * lands. Returns the number of rows appended per `username`.
     *
-    * The deduped batch is STAGED to a temp dir before the append: the
-    * dedup plan reads `gamesPath` (the anti-join side), so appending from
-    * the live plan would race its own scan if any partition were
-    * recomputed mid-write (cache eviction / executor loss under a mere
-    * `cache()` could recompute the anti-join against a half-appended
-    * table, dropping or duplicating rows). Writing the staged parquet
-    * severs the read-write cycle deterministically; the append then only
-    * reads the staging dir.
+    * The deduped batch is one lazy graft checkpoint: the per-user count
+    * materializes it, and the append (skipped on an empty count, so a
+    * run with no new games adds no file) writes the same rows. One copy
+    * is safe although the dedup reads the table it appends to:
+    *  - the store scan's file list is fixed when [[games]] builds the
+    *    relation, so a recomputed plan never sees this append's files;
+    *  - not `cache()`: an append refreshes every cached plan that reads
+    *    the written path (`CacheManager.recacheByPath`), which would
+    *    recount the batch against its own files as 0 rows;
+    *  - a lost checkpoint block fails the run loudly, before the ledger
+    *    and state are saved, so it replays (K5).
     */
   def appendGames(spark: SparkSession, batch: DataFrame,
                   firstBy: Seq[Column] = Seq(col("archive_url"))): Map[String, Long] = {
     val keyed   = batch.filter(length(trim(col("game_url"))) > 0)
     val unkeyed = batch.filter(length(trim(col("game_url"))) <= 0)
-    val fresh = keyed
+    val fresh = GraftColumns.lazyCheckpoint(keyed
       .join(existingGameUrls(spark), Seq("game_url"), "left_anti")
       .withColumn("_first", row_number().over(
         Window.partitionBy(col("game_url")).orderBy(firstBy: _*)))
       .filter(col("_first") === 1)
       .select(batch.columns.map(col).toSeq: _*)
-      .union(unkeyed)
-    val stagingPath =
-      s"$root/_staging/games_${java.util.UUID.randomUUID().toString}"
-    fresh.write.mode("overwrite").parquet(stagingPath)
+      .union(unkeyed))
     try {
-      val staged = spark.read.schema(Schemas.gamesFact).parquet(stagingPath)
-      val appended = staged.groupBy(col("username")).count().collect()
+      val appended = fresh.groupBy(col("username")).count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (appended.nonEmpty) staged.write.mode("append").parquet(gamesPath)
+      if (appended.nonEmpty) fresh.write.mode("append").parquet(gamesPath)
       appended
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(stagingPath)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true)
-    }
+    } finally GraftColumns.unpersistCheckpoint(fresh)
   }
 
   /** K2: ledger append, BATCHED — one append job (one file) per call,
@@ -166,13 +160,27 @@ final class GamesStore(root: String) extends Serializable {
     * all its users. Per-row appends write a one-row parquet file each; a
     * 10k-archive backfill would litter the table with 20k+ tiny files
     * whose footers dominate every later scan.
+    *
+    * Replay dedup: rows the ledger already holds, keyed on (user,
+    * archive, count), are dropped — a replay's row carries a fresh
+    * `processed_at_utc` and would double-count every `game_count`
+    * aggregate over K2. A reprocess-latest that FOUND new games still
+    * records the updated total; one whose count did not change records
+    * nothing here, and its visibility lives in the status log. The
+    * anti-join runs in Spark: the ledger never reaches the driver.
     */
   def appendLedgerRows(spark: SparkSession,
                        rows: Seq[(String, String, Long)]): Unit = {
     if (rows.isEmpty) return
     import spark.implicits._
+    val fresh = rows.toDF("username", "archive_url", "game_count")
+      .join(ledger(spark).select(col("username"), col("archive_url"),
+              col("game_count").cast("long").as("game_count")),
+            Seq("username", "archive_url", "game_count"), "left_anti")
+      .as[(String, String, Long)].collect().toSeq
+    if (fresh.isEmpty) return
     val ts = new java.sql.Timestamp(System.currentTimeMillis())
-    rows.map { case (u, a, n) => (u, a, ts, n.toInt) }
+    fresh.map { case (u, a, n) => (u, a, ts, n.toInt) }
       .toDF("username", "archive_url", "processed_at_utc", "game_count")
       .coalesce(1)
       .write.mode("append").parquet(ledgerPath)

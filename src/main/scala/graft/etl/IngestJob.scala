@@ -53,24 +53,10 @@ final class IngestJob(
       else fetchAndAppend(users, todo)
     val ok = todo.map { case (u, urls) => u -> urls.filter(url => fetched((u, url)).ok) }
 
-    // K2: one ledger append for the run, minus the (user, archive, count)
-    // rows the ledger already holds. A replay's row carries a fresh
-    // processed_at_utc, so without this filter it would double-count every
-    // `game_count` aggregate over K2. Keyed on the count, not the archive
-    // alone, so a deliberate reprocess-latest that FOUND new games still
-    // records the updated total; one whose content changed but whose count
-    // did not records nothing here, and its visibility lives in the status
-    // log (ArchiveProcessed rows are written per run regardless). The
-    // anti-join runs in Spark: only this run's candidates reach the driver.
-    import spark.implicits._
-    val candidates = for ((u, urls) <- ok; url <- urls) yield (u, url, fetched((u, url)).games)
-    val unrecorded = candidates
-      .toDF("username", "archive_url", "game_count")
-      .join(store.ledger(spark).select(col("username"), col("archive_url"),
-              col("game_count").cast("long").as("game_count")),
-            Seq("username", "archive_url", "game_count"), "left_anti")
-      .as[(String, String, Long)].collect().toSet
-    store.appendLedgerRows(spark, candidates.filter(unrecorded))
+    // K2: one ledger append for the run; the store drops the rows a
+    // replay has already recorded
+    store.appendLedgerRows(spark,
+      for ((u, urls) <- ok; url <- urls) yield (u, url, fetched((u, url)).games))
 
     // K3: one status append for the run, each user's rows in CSV order
     val pending = todo.toMap

@@ -756,8 +756,7 @@ object Dedup {
     * size, and every downstream consumer reads a column-pruned scan of
     * the table. The sets table — larger than the corpus (exploded
     * shingle arrays) — is DELETED once the verified pairs are
-    * materialized; pass `keepSets = true` to retain it for resuming a
-    * multi-stage run (the caller then owns cleanup).
+    * materialized, so no call leaves a copy behind.
     *
     * RELEASE CONTRACT: result == handle ([[containmentPairs]]).
     */
@@ -765,7 +764,6 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       n: Int, num: Int, den: Int, checkpointDir: String,
       numPerm: Int = 128, bands: Int = 32,
-      keepSets: Boolean = false,
       broadcastPairCap: Long = DefaultBroadcastPairCap): DataFrame = {
     val spark = docs.sparkSession
     val path = s"$checkpointDir/minhash_sets_${java.util.UUID.randomUUID()}"
@@ -776,7 +774,7 @@ object Dedup {
       .write.mode("overwrite").parquet(path)
     try pairsFromShingleSets(spark.read.parquet(path), num, den, numPerm,
                              bands, broadcastPairCap)
-    finally if (!keepSets) {
+    finally {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
@@ -795,10 +793,7 @@ object Dedup {
     *    corpus streams through the whole plan exactly twice (banding pass
     *    + verify pass), with zero wide dependencies. Re-running the
     *    signature expressions on the second pass trades CPU for never
-    *    materializing corpus-sized state; a corpus with precomputed,
-    *    table-backed shingle sets (cf. [[minhashDedupPairsCheckpointed]]'s
-    *    `keepSets`) can pass that table as `corpus` with `textCol`
-    *    pointing at the original text to skip nothing but re-shingling.
+    *    materializing corpus-sized state.
     *  - The batch side is small (a day's crawl vs the accumulated corpus).
     *    Its banded keys broadcast when `batchRows·bands` fits under
     *    `broadcastPairCap` (counted, not assumed — an oversized batch

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -37,10 +37,13 @@ import graft.semantic.{Dashboard, FilterContext}
   * `_SUCCESS`-gated; batch N merges the latest version STRICTLY below
   * N, so an at-least-once replay rewrites its own version
   * byte-identically and readers never see a partial merge. The grains
-  * commit together, so a page never mixes two batches. Old versions
-  * stay on disk. State of the earlier per-grain layout
-  * (`<root>/<grain>/batch=<id>`) is not read: rebuild it from the
-  * source, as for a slicer change.
+  * commit together, so a page never mixes two batches. Once version N
+  * commits, every version below its predecessor P is deleted: a replay
+  * of N still finds P, and a reader that resolved P keeps it until
+  * N+1 commits, so the root holds at most two committed versions (plus
+  * any uncommitted dir above P) however many batches ran. State of the
+  * earlier per-grain layout (`<root>/<grain>/batch=<id>`) is not read:
+  * rebuild it from the source, as for a slicer change.
   *
   * Slicers: the page's [[FilterContext]] is fixed at stream definition
   * and applied to every batch BEFORE partial aggregation (row-level
@@ -60,46 +63,52 @@ object StreamingDashboard {
     Dashboard.allCounters(GameTransforms.withDerived(empty)).schema
   }
 
-  /** Latest COMMITTED state version strictly below `beforeBatchId`
-    * (None = no predecessor). Versions are parquet dirs `batch=<id>`
-    * under `root`.
+  /** The `batch=<id>` dirs under `root` by id, committed or not, and
+    * their file system. */
+  private def versions(spark: SparkSession, root: String)
+      : (FileSystem, Seq[(Long, Path)]) = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+    (fs, dirs.collect { case d if d.getName.startsWith("batch=") =>
+      d.getName.stripPrefix("batch=").toLong -> d })
+  }
+
+  /** Latest COMMITTED state version strictly below `beforeBatchId`, by
+    * id (None = no predecessor).
     */
   private def latestState(spark: SparkSession, root: String,
                           beforeBatchId: Long = Long.MaxValue)
-      : Option[DataFrame] = {
-    val p = new Path(root)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      // only fully-committed versions count: a crash mid-write leaves a
-      // batch=<id> dir without _SUCCESS, and an external reader landing
-      // on it would otherwise see a partial merge
-      val ids = fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory &&
-          fs.exists(new Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("batch=") =>
-          n.stripPrefix("batch=").toLong
-        }
-        .filter(_ < beforeBatchId)
-      if (ids.isEmpty) None
-      else Some(spark.read.schema(StateSchema)
-        .parquet(s"$root/batch=${ids.max}"))
-    }
+      : Option[(Long, DataFrame)] = {
+    val (fs, all) = versions(spark, root)
+    // only fully-committed versions count: a crash mid-write leaves a
+    // batch=<id> dir without _SUCCESS, and an external reader landing
+    // on it would otherwise see a partial merge
+    all.collect { case (id, dir) if id < beforeBatchId &&
+        fs.exists(new Path(dir, "_SUCCESS")) => id }
+      .maxOption
+      .map(id => id -> spark.read.schema(StateSchema).parquet(s"$root/batch=$id"))
   }
 
   /** One micro-batch of RAW game rows into the state: one counter pass
     * over the batch, merged with the latest committed version below
     * `batchId` and written as version `batchId`. Idempotent per
     * `batchId`: a replay merges the same predecessor version with the
-    * same partials and overwrites its own version.
+    * same partials and overwrites its own version. Once it commits, the
+    * versions below that predecessor are deleted.
     */
   def dashboardBatch(batch: DataFrame, stateRoot: String, batchId: Long,
                      ctx: FilterContext = FilterContext.empty): Unit = {
+    val spark = batch.sparkSession
     val part = Dashboard.allCounters(ctx(GameTransforms.withDerived(batch)))
-    latestState(batch.sparkSession, stateRoot, beforeBatchId = batchId)
-      .fold(part)(Dashboard.mergeCounters(_, part))
+    val pred = latestState(spark, stateRoot, beforeBatchId = batchId)
+    pred.fold(part) { case (_, prev) => Dashboard.mergeCounters(prev, part) }
       .write.mode("overwrite").parquet(s"$stateRoot/batch=$batchId")
+    for ((predId, _) <- pred) {
+      val (fs, all) = versions(spark, stateRoot)
+      for ((id, dir) <- all if id < predId) fs.delete(dir, true)
+    }
   }
 
   /** Wire the stream: raw game micro-batches → [[dashboardBatch]].
@@ -124,7 +133,7 @@ object StreamingDashboard {
 
   private def at(spark: SparkSession, stateRoot: String,
                  grain: String): DataFrame = {
-    val latest = latestState(spark, stateRoot).getOrElse(
+    val (_, latest) = latestState(spark, stateRoot).getOrElse(
       throw new IllegalStateException(s"no committed dashboard state " +
         s"under $stateRoot — run at least one batch first"))
     Dashboard.grain(latest, grain)

@@ -164,38 +164,33 @@ object GraftColumns {
     }
   }
 
-  /** ACTUAL materialized size (memory + disk block bytes) of an EAGER
-    * graft checkpoint, or -1 when unavailable (not a checkpoint scan,
-    * blocks evicted, empty frame). Unlike the plan-carried ESTIMATES
-    * ([[clampStats]]' subject) this is ground truth from the block
-    * manager — the number an operator can size a deliberate
-    * re-partitioning from (e.g. [[graft.operators.GraphOps]]'
+  /** ACTUAL materialized size (memory + disk block bytes) of the EAGER
+    * graft checkpoints a frame reads, or -1 when unavailable (no
+    * checkpoint scan, blocks evicted, empty frames). Unlike the
+    * plan-carried ESTIMATES ([[clampStats]]' subject) this is ground
+    * truth from the block manager — the number an operator can size a
+    * deliberate re-partitioning from (e.g. [[graft.operators.GraphOps]]'
     * keyed adjacency checkpoints derive their partition count as
     * bytes / advisoryPartitionSize, the same sizing rule AQE's
     * coalescing applies to shuffles). In-memory deserialized sizes run
     * larger than shuffle-serialized bytes, so a consumer dividing by a
     * byte target errs toward MORE partitions — the safe side.
     */
-  def materializedBytes(df: Dataset[_]): Long =
-    // collectFirst over the WHOLE analyzed tree, not a bare-root match
-    // (r15 ADVICE): a size hint is routinely a Project over the
-    // checkpoint (e.g. `denseRank(...).select(...)`), and the bare
-    // match returned -1 for it — silently sending every keyed
-    // checkpoint sized from such a hint to the fixed shuffle-partition
-    // fallback (the measured +13%-wall micro-task regime). Only tagged
-    // graft checkpoints count (a foreign cached RDD embedded in the
-    // plan must not size someone else's partitioning); the first one
-    // found is the hint's own materialization by construction. The
-    // checkpoint's blocks can only OVERSTATE a projection of it, which
-    // errs toward more partitions — the safe side.
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed.collectFirst {
-      case l: execution.LogicalRDD if l.rdd.name == CheckpointTag =>
-        df.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == l.rdd.id)
-          .map(i => i.memSize + i.diskSize)
-          .filter(_ > 0L)
-          .getOrElse(-1L)
-    }.getOrElse(-1L)
+  def materializedBytes(df: Dataset[_]): Long = {
+    // every tagged checkpoint in the WHOLE analyzed tree, each RDD once:
+    // a size hint is routinely a Project over one checkpoint, or a
+    // union/join of several, and each of them is part of its size. Only
+    // tagged graft checkpoints count (a foreign cached RDD embedded in
+    // the plan must not size someone else's partitioning). Checkpoint
+    // blocks can only OVERSTATE a projection of them, which errs toward
+    // more partitions — the safe side.
+    val ids = df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+      .collect { case l: execution.LogicalRDD if l.rdd.name == CheckpointTag => l.rdd.id }
+      .toSet
+    val bytes = df.sparkSession.sparkContext.getRDDStorageInfo
+      .collect { case i if ids(i.id) => i.memSize + i.diskSize }.sum
+    if (bytes > 0L) bytes else -1L
+  }
 
   /** Release the block-manager storage behind graft-created
     * `localCheckpoint`s ([[checkpoint]]) in a Dataset's plan.

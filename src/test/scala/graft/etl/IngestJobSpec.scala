@@ -95,11 +95,27 @@ class IngestJobSpec extends SparkSpec {
       a1 -> Right(s"""{"games":[${game("g1", 100, "1-0")}]}"""))
     val (job, store, states) = freshEnv(pages)
     states.save(job.run("alice"))
+    def gameFiles = Files.list(Paths.get(store.gamesPath)).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSet
+    val filesBefore = gameFiles
     // simulate the CI reprocess-latest policy: pop latest archive, rerun
     states.save(states.unmarkLatest(states.load()))
     val state2 = job.run("alice")
     assert(store.games(spark).count() == 1, "dedup makes reprocessing idempotent")
     assert(state2("alice").lastEndTime == 100L)
+    assert(gameFiles == filesBefore, "a run with no new games adds no games file")
+  }
+
+  test("ingest runs leave only the three tables under the store root") {
+    val (job, store, states, dir) = freshEnvAt(userPages("alice"))
+    states.save(job.run("alice"))
+    states.save(states.unmarkLatest(states.load()))
+    val grown = userPages("alice") ++ Map(archive("alice", "08") -> Right(
+      s"""{"games":[${game("alice-g3", 300, "1/2-1/2")},${game("alice-g4", 400, "1-0")}]}"""))
+    states.save(new IngestJob(spark, MapFetcher(grown), store, states, base).run("alice"))
+    assert(store.games(spark).count() == 4L)
+    assert(new java.io.File(s"$dir/warehouse").list().toSeq.sorted ==
+      Seq("games", "processed_archives", "status_log"))
   }
 
   test("ledger replay dedupe: reruns add no duplicate rows, new games add an updated row") {
@@ -395,6 +411,20 @@ class IngestJobSpec extends SparkSpec {
       store => {
         assert(store.games(spark).count() > 0, "games were written before the crash")
         assert(store.ledger(spark).count() == 0, "the ledger append is what failed")
+      })
+  }
+
+  test("K5 replay: a crash at the games append replays to a clean run") {
+    assertReplayEqualsCleanRun(
+      // as at the ledger: no _temporary dir under a regular file of that name
+      (store, _) => {
+        store.ensureAll(spark)
+        Files.createFile(Paths.get(store.gamesPath, "_temporary"))
+      },
+      classOf[org.apache.hadoop.fs.ParentNotDirectoryException],
+      store => {
+        assert(store.games(spark).count() == 0, "the games append is what failed")
+        assert(store.ledger(spark).count() == 0, "no ledger row precedes its games")
       })
   }
 

@@ -157,6 +157,20 @@ class ReleaseContractSpec extends SparkSpec {
     foreign.unpersist()
   }
 
+  test("materializedBytes sums every tagged checkpoint a hint reads") {
+    import graft.GraftOps._
+    val a = (0L until 200L).toDF("id").graftCheckpoint()
+    val b = (0L until 300L).toDF("id").graftCheckpoint()
+    try {
+      val (na, nb) = (GraftColumns.materializedBytes(a),
+                      GraftColumns.materializedBytes(b))
+      assert(na > 0L && nb > 0L, s"blocks of each checkpoint: $na, $nb")
+      assert(GraftColumns.materializedBytes(a.union(b)) === na + nb)
+      // one checkpoint read twice is one set of blocks
+      assert(GraftColumns.materializedBytes(a.union(a)) === na)
+    } finally Seq(a, b).foreach(GraftColumns.unpersistCheckpoint)
+  }
+
   test("media near-dup operators release their signature stores " +
        "through the result plan (deep traversal)") {
     val ids = (0L to 19L).toDF("doc_id")

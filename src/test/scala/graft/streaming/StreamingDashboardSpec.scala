@@ -73,10 +73,11 @@ class StreamingDashboardSpec extends SparkSpec {
       union = if (union == null) b else union.unionByName(b)
       assertVisualsEqual(union, root, FilterContext.empty, s"batch$k")
     }
-    // one version per batch, holding all six grains: no per-grain dirs
+    // one version per batch, holding all six grains: no per-grain dirs;
+    // batch 2 committed over batch 1, so batch 0 is gone
     assert(new java.io.File(root).list().toSeq.sorted ===
-             Seq("batch=0", "batch=1", "batch=2"),
-           "the state root must hold exactly one version dir per batch")
+             Seq("batch=1", "batch=2"),
+           "the state root must hold the latest version and its predecessor")
     // crash replay of the LAST batch (same id, same input): the version
     // rewrites from the same (predecessor, partials) pair — state and
     // visuals must come back identical

@@ -33,6 +33,9 @@ class StreamingIngestSpec extends SparkSpec {
     StreamingIngest.runAvailableNow(
       StreamingIngest.ingestStream(spark, landing.toString, store, "alice", ckpt))
     assert(store.games(spark).count() === 2)
+    // the batch is written once, straight into the games table
+    assert(new java.io.File(s"$root/warehouse").list().toSeq.sorted ===
+      Seq("games", "processed_archives", "status_log"))
 
     // run 2: a new file lands containing one duplicate + one new game.
     // The checkpoint makes run 2 process ONLY the new file; the sink
